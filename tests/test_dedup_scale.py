@@ -87,7 +87,30 @@ class TestBroadcastBudgetGate:
         bcast = minhash_dedup_pairs(docs, threshold=0.5)  # engages at test scale
         assert _pairs_set(bcast) == base
         plan = bcast._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
+        # the grouped Arrow verify kernel, not just any broadcast join (the
+        # candidate attach broadcasts under its own budget either way)
+        assert "MapInArrow kernel(" in plan, plan
+        base_plan = minhash_dedup_pairs(
+            docs, threshold=0.5, shingle_broadcast_budget=0
+        )._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" not in base_plan, base_plan
+
+    def test_arrow_verify_back_to_back_corpora_exact(self, docs):
+        # the worker caches the broadcast store's numpy views; two calls on
+        # corpora that share doc ids but not texts must each verify against
+        # their own store (an object-id key can alias a collected store)
+        flipped = docs.select(
+            (F.lit(10_000_000) - F.col("doc_id")).alias("doc_id"), "text"
+        )
+        mirrored = docs.select(
+            "doc_id", F.reverse(F.split("text", " ")).alias("w")
+        ).select("doc_id", F.array_join("w", " ").alias("text"))
+        for corpus in (docs, mirrored, flipped, docs):
+            exact = _pairs_set(
+                minhash_dedup_pairs(corpus, threshold=0.5, shingle_broadcast_budget=0)
+            )
+            assert exact
+            assert _pairs_set(minhash_dedup_pairs(corpus, threshold=0.5)) == exact
 
     def test_payload_bytes_measured_not_estimated(self, spark):
         from truthound_spark.pipeline.dedup import _payload_relation_bytes

@@ -163,6 +163,13 @@ class Validator:
     driver-side logic (outliers, drift, referential joins) override
     ``validate(df)`` directly — those run as separate Spark jobs, still
     declarative DataFrame plans.
+
+    The ``specs(df)`` contract: it starts no Spark job and does not depend
+    on the data — only on the validator's parameters and ``df``'s schema.
+    The executor relies on this to compile a suite once per schema and
+    reuse it on every later frame (e.g. each streaming micro-batch).
+    Data-dependent set-up (a reference table's count, a modal value)
+    belongs in ``validate()``.
     """
 
     name: str = "validator"

@@ -11,13 +11,24 @@ aggregation; Catalyst deduplicates identical sub-expressions. At 100 TB this
 is the difference between N full scans and 1. Evidence passes (ResultFormat
 >= BASIC) are per-issue ``filter(pred).limit(k)`` jobs over the (optionally
 cached) input.
+
+Suite reuse: ``specs(df)`` is a pure function of the validator's
+parameters and the frame's schema (see ``Validator``), so each validator
+instance keeps its compiled specs and aliased aggregate Columns for the
+latest (schema, parameters) it saw. A streaming sink that validates
+micro-batch after micro-batch of one schema compiles its suite once; only
+the fused aggregate runs per batch.
 """
 
 from __future__ import annotations
 
-from typing import Any
+import datetime
+import weakref
+from decimal import Decimal
+from enum import Enum
+from typing import Any, NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from truthound_spark.core.base import ExpressionSpec, Validator
@@ -26,6 +37,80 @@ from truthound_spark.types import ResultFormat, ResultFormatConfig, Severity
 
 #: Evidence sample size per issue (reference: SafeSampler, base.py:204-217).
 SAMPLE_LIMIT = 20
+
+_PLAIN = (
+    type(None), bool, int, float, complex, str, bytes, Decimal,
+    datetime.date, datetime.time, datetime.timedelta, Enum,
+)
+
+
+class _NotPlain(Exception):
+    pass
+
+
+def _freeze(value: Any) -> Any:
+    """A comparable copy of a plain parameter value: scalars and lists,
+    tuples, sets and dicts of them, with their types (``1 != 1.0 != True``
+    as parameters). Anything else raises ``_NotPlain``."""
+    if isinstance(value, _PLAIN):
+        return type(value), value
+    if isinstance(value, (list, tuple)):
+        return type(value), tuple(_freeze(v) for v in value)
+    if isinstance(value, (set, frozenset)):
+        return type(value), frozenset(_freeze(v) for v in value)
+    if isinstance(value, dict):
+        return dict, tuple((_freeze(k), _freeze(v)) for k, v in value.items())
+    raise _NotPlain
+
+
+def _params(validator: Validator) -> Any:
+    """Snapshot of the validator's instance attributes, or None when one
+    of them is not a plain value (a DataFrame, a Column, a callable or any
+    other object): its specs could then depend on state the snapshot cannot
+    see, so it is compiled on every call."""
+    try:
+        return _freeze(vars(validator))
+    except (_NotPlain, TypeError):
+        return None
+
+
+class _Compiled(NamedTuple):
+    vi: int
+    schema: Any
+    params: Any
+    members: list[tuple[str, ExpressionSpec]]
+    agg_cols: list[Column]
+
+
+#: The latest compiled form of each validator instance; an entry goes when
+#: its validator is collected.
+_COMPILED: "weakref.WeakKeyDictionary[Validator, _Compiled]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _compile(
+    validator: Validator, vi: int, df: DataFrame
+) -> tuple[list[tuple[str, ExpressionSpec]], list[Column]]:
+    """The validator's (prefix, spec) members at suite position ``vi`` and
+    their aliased aggregate Columns, reused while the position, the frame's
+    schema and the validator's parameters are unchanged."""
+    params = _params(validator)
+    entry = None
+    if params is not None:
+        try:
+            entry = _COMPILED.get(validator)
+        except TypeError:  # unhashable or not weak-referenceable: no reuse
+            params = None
+    if entry is not None and (entry.vi, entry.schema, entry.params) == (
+        vi, df.schema, params
+    ):
+        return entry.members, entry.agg_cols
+    members = [(f"s{vi}_{si}", spec) for si, spec in enumerate(validator.specs(df))]
+    agg_cols = [c for prefix, spec in members for c in spec.agg_columns(prefix)]
+    if params is not None:
+        _COMPILED[validator] = _Compiled(vi, df.schema, params, members, agg_cols)
+    return members, agg_cols
 
 
 class BatchExpressionExecutor:
@@ -51,13 +136,15 @@ class BatchExpressionExecutor:
     def execute_with_stats(
         self, df: DataFrame
     ) -> tuple[list[ValidationIssue], dict[str, Any]]:
-        # Phase 0: compile all validators to specs.
+        # Phase 0: compile all validators to specs (reused per schema).
         compiled: list[tuple[str, ExpressionSpec]] = []
+        agg_cols = [F.count(F.lit(1)).cast("long").alias("__row_count")]
         exec_issues: list[ValidationIssue] = []
         for vi, validator in enumerate(self.validators):
             try:
-                for si, spec in enumerate(validator.specs(df)):
-                    compiled.append((f"s{vi}_{si}", spec))
+                members, cols = _compile(validator, vi, df)
+                compiled.extend(members)
+                agg_cols.extend(cols)
             except Exception as exc:  # exception isolation: base.py:426-548
                 exec_issues.append(
                     ValidationIssue(
@@ -76,9 +163,6 @@ class BatchExpressionExecutor:
         # referencing a dropped column), fall back to per-spec jobs so one
         # bad check cannot crash the suite (reference exception isolation:
         # base.py:426-548).
-        agg_cols = [F.count(F.lit(1)).cast("long").alias("__row_count")]
-        for prefix, spec in compiled:
-            agg_cols.extend(spec.agg_columns(prefix))
         try:
             row = df.agg(*agg_cols).collect()[0].asDict()
         except Exception:

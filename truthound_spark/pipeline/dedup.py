@@ -916,15 +916,16 @@ def _payload_relation_bytes(rel: DataFrame, arr_col: str, elem_bytes: int) -> in
 
 
 #: Worker-side cache of the b-side shingle store's numpy views, keyed by
-#: the broadcast payload's object id (the pyspark broadcast registry
-#: already caches the unpickled Table per worker process; this caches
-#: the offsets/values numpy conversion on top — §4.5 heavyweight init
-#: once per worker, not per task).
+#: the broadcast's id — a token fixed when the plan is built and never
+#: reused within a SparkContext, unlike an object id, which CPython hands
+#: to a later call's store once the old one is collected (the pyspark
+#: broadcast registry already caches the unpickled Table per worker
+#: process; this caches the offsets/values numpy conversion on top —
+#: §4.5 heavyweight init once per worker, not per task).
 _VERIFY_STORE_CACHE: dict = {}
 
 
-def _verify_store_np(tbl):
-    key = id(tbl)
+def _verify_store_np(tbl, key: int):
     hit = _VERIFY_STORE_CACHE.get(key)
     if hit is None:
         import numpy as np  # noqa: F401
@@ -974,6 +975,7 @@ def _verify_pairs_arrow(
         sh.select("id", F.sort_array("sh").alias("sh")).orderBy("id").toArrow()
     )
     bstore = spark.sparkContext.broadcast(store_tbl)
+    store_key = bstore._jbroadcast.id()
 
     grouped = cands.groupBy("id_a").agg(F.collect_list("id_b").alias("ids"))
     n_groups = grouped.count()
@@ -988,7 +990,7 @@ def _verify_pairs_arrow(
         import numpy as np
         import pyarrow as pa
 
-        b_ids, b_off, b_flat = _verify_store_np(bstore.value)
+        b_ids, b_off, b_flat = _verify_store_np(bstore.value, store_key)
         nb_store = len(b_ids)
         for batch in batches:
             n = batch.num_rows

@@ -127,7 +127,7 @@ def _learn_aggs(fields, approx_distinct: bool):
 
 
 def learn(df: DataFrame, approx_distinct: bool = False) -> Schema:
-    """Single-pass schema learning (reference: schema.py:244-277).
+    """Schema learning in two aggregate jobs (reference: schema.py:244-277).
 
     Scale notes (100 TB): quantiles use ``percentile_approx`` (t-digest-like
     sketch, bounded memory per partition) rather than exact ``percentile``
@@ -146,9 +146,15 @@ def learn(df: DataFrame, approx_distinct: bool = False) -> Schema:
     ObjectHashAggregateExec — no whole-stage codegen for any of the
     min/max/mean/std/count aggregates, and with countDistinct in the mix
     the planner adds SortAggregate levels over the Expand. Splitting
-    keeps the wide job fully codegen'd; the values are bit-identical
-    (same aggregate expressions over the same rows — only the job
-    boundary moves).
+    keeps the wide job fully codegen'd. The values are the same
+    aggregate expressions over the same rows, but not bit-identical to
+    the fused form: the split mean runs in HashAggregate and the fused
+    one in ObjectHashAggregate, which can differ in the last ulp.
+
+    Snapshot caveat: the two jobs each read ``df``. On a source that can
+    change between them (files rewritten, an unpersisted random sample)
+    the quantiles may come from a different snapshot than min/max/mean/
+    row_count; persist or checkpoint the input when they must agree.
     """
     aggs, pct_aggs, numeric, string = _learn_aggs(df.schema.fields, approx_distinct)
     row = df.agg(*aggs).collect()[0].asDict()

@@ -13,6 +13,7 @@ Spark mapping (1:1 per SURVEY §2.10):
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame
@@ -26,7 +27,9 @@ class StreamingValidationSink:
     (reference: realtime/base.py:369-551 validate_batch/validate_stream).
 
     Results accumulate in-memory and stream to ``on_result`` (the checkpoint
-    action surface: alerting/webhooks in the reference)."""
+    action surface: alerting/webhooks in the reference). Names and classes
+    in ``validators`` become instances once, here, so every batch reuses
+    the same compiled suite."""
 
     def __init__(
         self,
@@ -34,11 +37,15 @@ class StreamingValidationSink:
         on_result: Callable[[int, ValidationRunResult], None] | None = None,
         max_results: int = 1000,
     ) -> None:
-        self.validators = validators
+        import truthound_spark.validators  # noqa: F401  (registers the names)
+        from truthound_spark.core.registry import resolve
+
+        self.validators = resolve(validators)
         self.on_result = on_result
         self.max_results = max_results
         self.results: list[tuple[int, ValidationRunResult]] = []
-        self._seen_batches: set[int] = set()
+        # the latest batch ids, oldest first, capped like ``results``
+        self._seen_batches: OrderedDict[int, None] = OrderedDict()
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from truthound_spark.api import check
@@ -48,7 +55,9 @@ class StreamingValidationSink:
         # re-alerting it would duplicate notifications
         if batch_id in self._seen_batches:
             return
-        self._seen_batches.add(batch_id)
+        self._seen_batches[batch_id] = None
+        if len(self._seen_batches) > max(self.max_results, 1):
+            self._seen_batches.popitem(last=False)
         result = check(batch_df, validators=self.validators)
         self.results.append((batch_id, result))
         if len(self.results) > self.max_results:  # bound driver memory on

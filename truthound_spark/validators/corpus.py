@@ -28,6 +28,7 @@ pipeline/dedup.py) in the ExpressionSpec contract:
 
 from __future__ import annotations
 
+import copy
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -342,9 +343,9 @@ class EmbeddingHealthValidator(Validator):
     ``pipeline.similarity.embedding_stats`` (same expressions, same
     modal-dimension reference when ``expected_dim`` is omitted).
 
-    The specs ride the suite's single aggregate like every other
-    validator; the one extra job is the modal-dimension probe (skipped
-    when ``expected_dim`` is given)."""
+    The specs are one aggregate; without ``expected_dim``, ``validate()``
+    first runs the modal-dimension probe (one extra job) and compiles
+    against it, so ``specs()`` stays free of Spark jobs."""
 
     def __init__(
         self,
@@ -362,22 +363,35 @@ class EmbeddingHealthValidator(Validator):
         self.max_zero = max_zero
         self.max_dim_mismatch = max_dim_mismatch
 
+    def validate(
+        self, df: DataFrame, row_count: int | None = None
+    ) -> list[ValidationIssue]:
+        from truthound_spark.core.executor import BatchExpressionExecutor
+
+        resolved = self
+        if self.expected_dim is None:
+            v = F.col(self._target_columns(df, [self.column])[0]).cast("array<double>")
+            mode_row = (
+                df.filter(v.isNotNull())
+                .groupBy(F.size(v).alias("__d"))
+                .agg(F.count(F.lit(1)).alias("__c"))
+                .orderBy(F.desc("__c"), F.asc("__d"))
+                .first()
+            )
+            resolved = copy.copy(self)
+            resolved.expected_dim = mode_row["__d"] if mode_row is not None else None
+        return BatchExpressionExecutor([resolved]).execute(df)
+
     def specs(self, df: DataFrame) -> list[ExpressionSpec]:
+        """The four checks against ``expected_dim``; with it unset (and
+        no modal dimension resolved by ``validate()``) the dimension
+        check never fires."""
         (c,) = self._target_columns(df, [self.column])
         v = F.col(c).cast("array<double>")
         dim = F.size(v)
         has_nan = F.exists(v, lambda x: F.isnan(x))
         is_zero = (dim > 0) & F.forall(v, lambda x: x == F.lit(0.0))
         expected = self.expected_dim
-        if expected is None:
-            mode_row = (
-                df.filter(v.isNotNull())
-                .groupBy(dim.alias("__d"))
-                .agg(F.count(F.lit(1)).alias("__c"))
-                .orderBy(F.desc("__c"), F.asc("__d"))
-                .first()
-            )
-            expected = mode_row["__d"] if mode_row is not None else None
         mismatch = (
             (v.isNotNull() & (dim != F.lit(expected)))
             if expected is not None

@@ -138,9 +138,9 @@ class TableRowCountCompareValidator(Validator):
     """Row count vs a reference DataFrame (reference: table/row_count.py:142-221).
 
     comparison ∈ {equal, greater, greater_equal, less, less_equal};
-    ``tolerance_ratio`` applies to 'equal'. Both counts run as one
-    aggregate each — at scale the reference count should be a cached
-    metric, so we accept an int as well.
+    ``tolerance_ratio`` applies to 'equal'. The reference count is one
+    job on the reference frame — at scale it should be a cached metric,
+    so we accept an int as well.
     """
 
     name = "table_row_count_compare"
@@ -166,29 +166,29 @@ class TableRowCountCompareValidator(Validator):
         self.comparison = comparison
         self.tolerance_ratio = tolerance_ratio
 
-    def specs(self, df: DataFrame) -> list[ExpressionSpec]:
+    def validate(self, df: DataFrame, row_count: int | None = None) -> list[ValidationIssue]:
+        # the reference count is a job on ANOTHER frame, so it cannot ride
+        # the suite aggregate (and specs() must start no job); the checked
+        # frame's count comes from the suite's row count when check() has one
         ref_count = (
             self.reference_table
             if isinstance(self.reference_table, int)
             else self.reference_table.count()
         )
-        cmp, comparator = self.comparison, self.COMPARISONS[self.comparison]
-        tol = int(ref_count * self.tolerance_ratio)
-
-        def judge(m: dict[str, Any]) -> tuple[bool, Any, str]:
-            n = m.get("n") or 0
-            ok = comparator(n, ref_count, tol)
-            return ok, n, f"row count {n} is not {cmp} to reference {ref_count}"
-
+        n = row_count if row_count is not None else df.count()
+        cmp = self.comparison
+        if self.COMPARISONS[cmp](n, ref_count, int(ref_count * self.tolerance_ratio)):
+            return []
         return [
-            ExpressionSpec(
-                name=self.name,
-                issue_type="table_row_count_compare_failed",
+            ValidationIssue(
                 column=None,
-                extra_exprs={"n": F.count(F.lit(1))},
+                issue_type="table_row_count_compare_failed",
+                count=0,
+                severity=Severity.HIGH,
+                validator_name=self.name,
                 expected=f"row count {cmp} {ref_count}",
-                judge=judge,
-                fixed_severity=Severity.HIGH,
+                actual=n,
+                details=f"row count {n} is not {cmp} to reference {ref_count}",
             )
         ]
 
