@@ -26,7 +26,7 @@ import logging
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
@@ -64,11 +64,13 @@ DEFAULT_PAIR_BROADCAST_BUDGET = 64 << 20
 #: array per DOCUMENT, ~0.9 GB at the same corpus) turns the pair-key
 #: join into a BroadcastHashJoin: the heavy per-pair relation never
 #: moves, and the intersect runs in the same stage that attached sh_a.
-#: The gate is MEASURED (one narrow aggregate over the checkpointed /
-#: bucketed shingle table — count + total elements), so a corpus whose
-#: shingle relation outgrows the budget falls back to the shuffle-hash
-#: shape automatically: at 100 TB the b-side is TB-scale and this
-#: broadcast never engages. 0 disables the broadcast path entirely.
+#: The gate is MEASURED — row count + total elements of the broadcast
+#: table, observed on the job that checkpoints it (inline shingles, the
+#: indexed probe's delta) or one narrow aggregate over a stored bucketed
+#: table — so a corpus whose shingle relation outgrows the budget falls
+#: back to the shuffle-hash shape automatically: at 100 TB the b-side is
+#: TB-scale and this broadcast never engages. 0 disables the broadcast
+#: path entirely.
 DEFAULT_SHINGLE_BROADCAST_BUDGET = 2 << 30
 
 #: Cap on the number of input files whose (length, mtime) statuses a
@@ -102,13 +104,13 @@ SHINGLE_TOKENIZER_VERSION = 1
 DEDUP_INDEX_VERSION = 2
 
 #: DataFrames persisted by dedup internals (candidate-pair relations,
-#: delta shingle caches) and not yet released. persist() is the point —
-#: every verify-stage consumer reads the same blocks — but a long-lived
-#: session running many dedups would otherwise accumulate cached blocks
-#: until LRU pressure evicts them (ADVICE r12). Call
-#: :func:`release_dedup_caches` after the results of a dedup call have
-#: been consumed (collected / written).
-_TRACKED_PERSISTS: list[DataFrame] = []
+#: delta shingle caches) and verify-store broadcasts, not yet released.
+#: persist() is the point — every verify-stage consumer reads the same
+#: blocks — but a long-lived session running many dedups would otherwise
+#: accumulate cached blocks and broadcast files until LRU pressure evicts
+#: them (ADVICE r12). Call :func:`release_dedup_caches` after the results
+#: of a dedup call have been consumed (collected / written).
+_TRACKED_PERSISTS: list = []
 
 
 def _persist_tracked(df: DataFrame) -> DataFrame:
@@ -121,23 +123,29 @@ def _persist_tracked(df: DataFrame) -> DataFrame:
 
 
 def release_dedup_caches() -> int:
-    """Unpersist every relation the dedup pipelines cached and clear the
-    registry; returns how many were released.
+    """Unpersist every relation the dedup pipelines cached, destroy every
+    verify-store broadcast, and clear the registry; returns how many were
+    released.
 
-    Safe to call at any time: unpersist only drops the cached blocks —
-    lineage is intact, so a still-unconsumed plan recomputes instead of
-    failing. Intended after consuming the output of
-    ``minhash_dedup_pairs`` / ``incremental_dedup(_indexed)`` /
-    ``dedup_clusters`` in a long-lived session."""
+    Call it after consuming the output of ``minhash_dedup_pairs`` /
+    ``incremental_dedup(_indexed)`` / ``dedup_clusters`` in a long-lived
+    session. Unpersisting only drops cached blocks — lineage is intact, so
+    a still-unconsumed plan recomputes — but a destroyed broadcast is gone:
+    a plan built before the release that verifies through the Arrow kernel
+    fails if it runs after it."""
     n = 0
     while _TRACKED_PERSISTS:
-        df = _TRACKED_PERSISTS.pop()
+        obj = _TRACKED_PERSISTS.pop()
         try:
-            df.unpersist()
+            if isinstance(obj, DataFrame):
+                obj.unpersist()
+            else:
+                obj.destroy()
             n += 1
         except Exception:  # session already stopped — nothing to release
             pass
     return n
+
 
 # ---------------------------------------------------------------------------
 # tokenization helpers (pure column expressions)
@@ -490,6 +498,31 @@ def minhash_lsh_candidates(
     bucket hashes are cheap column refs — Catalyst cannot re-inline the
     shingle pipeline into them.
     """
+    pairs, _ = _lsh_pair_rows(
+        df, text_col, id_col, num_hashes, bands, shingle_n, max_bucket_size,
+        _shingles=_shingles, _hashed_shingles=_hashed_shingles,
+    )
+    return pairs.dropDuplicates()
+
+
+def _lsh_pair_rows(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    max_bucket_size: int | None,
+    _shingles: DataFrame | None = None,
+    _hashed_shingles: DataFrame | None = None,
+) -> tuple[DataFrame, int | None]:
+    """(id_a, id_b) rows with id_a < id_b: every candidate pair of
+    :func:`minhash_lsh_candidates`, possibly more than once — the caller
+    deduplicates (``dropDuplicates``, or a ``collect_set`` grouping that
+    needs the same shuffle anyway) — and a measured upper bound on the
+    number of distinct pairs (the expansion size summed over the distinct
+    member sets; None on the exact self-join path, which has no
+    materialized step to measure it on)."""
     if bands > num_hashes or num_hashes % bands != 0:
         raise ValueError(
             f"bands must divide num_hashes (got num_hashes={num_hashes}, "
@@ -497,11 +530,6 @@ def minhash_lsh_candidates(
             "one shared bucket (all-pairs join), and a remainder silently "
             "drops trailing hashes"
         )
-    rows_per_band = num_hashes // bands
-    # materialize the aggregated signature table once (narrow: one row of
-    # k longs per doc); the banded self-join below re-derives band bucket
-    # hashes from it on both sides as cheap column math instead of
-    # materializing the bands×-wider exploded entry table
     sig = minhash_signatures(
         df,
         text_col,
@@ -510,103 +538,97 @@ def minhash_lsh_candidates(
         shingle_n,
         _shingles=_shingles,
         _hashed_shingles=_hashed_shingles,
-    ).localCheckpoint(eager=True)
-    band_entries = _band_entries(sig, num_hashes, bands)
-    if max_bucket_size is not None:
-        # ONE groupBy collects each colliding bucket's sorted member ids
-        # (state is O(bucket size) longs — bounded by the corpus, never
-        # quadratic), then pairs are EXPANDED MAP-SIDE from the arrays:
-        # n ≤ cap buckets emit all C(n,2) pairs (≤ ~131k structs per
-        # bucket at the default cap, built inside whole-stage codegen by
-        # nested transform/slice — no Python), n > cap buckets emit O(n)
-        # star edges from the min-id hub. Total shuffles: the groupBy +
-        # the final dropDuplicates — the SAME count as the exact
-        # self-join path, so the guard costs ~nothing when it doesn't
-        # bind (the r11 join-back draft cost 2 extra full-entry shuffles,
-        # measured 481s vs 278s exact at 500k docs; this form removes
-        # them). Singleton buckets can neither pair nor star and are
-        # dropped before the checkpoint. The eager checkpoint is the
-        # guard's observability point: worst-bucket stats cost one
-        # aggregate over the compact table, not a second banding pass.
-        grouped = (
-            band_entries.groupBy("band", "bucket")
-            .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-            .filter(F.size("ids") > 1)
-            .localCheckpoint(eager=True)
+    )
+    if max_bucket_size is None:
+        # materialize the aggregated signature table once (narrow: one
+        # row of k longs per doc); the banded self-join below re-derives
+        # band bucket hashes from it on both sides as cheap column math
+        # instead of materializing the bands×-wider exploded entry table
+        band_entries = _band_entries(
+            sig.localCheckpoint(eager=True), num_hashes, bands
         )
-        stats = grouped.agg(
-            F.max(F.size("ids")).alias("mx"),
-            F.sum(
-                F.when(F.size("ids") > max_bucket_size, F.lit(1)).otherwise(
-                    F.lit(0)
-                )
-            ).alias("over"),
-        ).first()
-        if stats and stats["over"]:
-            logger.warning(
-                "LSH skew guard engaged: %d band-bucket(s) exceed "
-                "max_bucket_size=%d (worst observed bucket: %d members) — "
-                "degrading them to star edges; pass max_bucket_size=None "
-                "for exact all-pairs semantics",
-                int(stats["over"]),
-                int(max_bucket_size),
-                int(stats["mx"]),
-            )
-        # expand pairs from the DISTINCT member sets, not from every
-        # (band, bucket) row (r14, guide §2.3 shuffle fewer bytes): on a
-        # duplicate-heavy corpus — exactly the dedup workload — all b
-        # bands of an m-copy duplicate group collide on the SAME sorted
-        # member list, so expanding per band-bucket emits each pair up
-        # to b times only for the trailing dropDuplicates to discard
-        # (measured at the 500k-doc decade corpus: 1.02M grouped rows →
-        # 630k distinct member sets, ~800M pre-dedup pair rows → ~35M,
-        # candidate stage 25.9 → 8.8 s, pair set bit-identical).
-        # Emitting from distinct `ids` arrays produces the same pair
-        # UNION by construction — C(ids, 2) and the star edges are pure
-        # functions of the member array. Catalyst reuses the single
-        # dedup exchange across the small/star branches of the union.
-        # Skew-guard stats stay on the PRE-dedup relation: over-cap
-        # counts are a property of band-buckets, not of member sets.
-        expand = grouped.dropDuplicates(["ids"])
-        small_pairs = (
-            expand.filter(F.size("ids") <= max_bucket_size)
-            .select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(ids, (x, i) -> "
-                        "transform(slice(ids, i + 2, size(ids)), "
-                        "y -> struct(x AS id_a, y AS id_b))))"
-                    )
-                ).alias("p")
-            )
-            .select("p.id_a", "p.id_b")
-        )
-        star_pairs = (
-            expand.filter(F.size("ids") > max_bucket_size)
-            .select(
-                F.explode(
-                    F.expr(
-                        "transform(slice(ids, 2, size(ids) - 1), "
-                        "y -> struct(ids[0] AS id_a, y AS id_b))"
-                    )
-                ).alias("p")
-            )
-            .select("p.id_a", "p.id_b")
-        )
-        return small_pairs.unionByName(star_pairs).dropDuplicates()
-    left = band_entries.alias("a")
-    right = band_entries.alias("b")
-    pairs = (
-        left.join(
+        left = band_entries.alias("a")
+        right = band_entries.alias("b")
+        pairs = left.join(
             right,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
             & (F.col("a.id") < F.col("b.id")),
+        ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        return pairs, None
+    # ONE groupBy collects each colliding bucket's sorted member ids
+    # (state is O(bucket size) longs — bounded by the corpus, never
+    # quadratic), then pairs are EXPANDED MAP-SIDE from the arrays:
+    # n ≤ cap buckets emit all C(n,2) pairs (≤ ~131k structs per bucket
+    # at the default cap, built inside whole-stage codegen by nested
+    # transform/slice — no Python), n > cap buckets emit O(n) star edges
+    # from the min-id hub. Singleton buckets can neither pair nor star
+    # and are dropped before the checkpoint.
+    #
+    # Pairs expand from the DISTINCT member sets, not from every
+    # (band, bucket) row (r14, guide §2.3 shuffle fewer bytes): on a
+    # duplicate-heavy corpus — exactly the dedup workload — all b bands of
+    # an m-copy duplicate group collide on the SAME sorted member list,
+    # so expanding per band-bucket emits each pair up to b times only for
+    # the caller's dedup to discard (measured at the 500k-doc decade
+    # corpus: 1.02M grouped rows → 630k distinct member sets, ~800M
+    # pre-dedup pair rows → ~35M, candidate stage 25.9 → 8.8 s, pair set
+    # bit-identical). The member-set grouping runs inside the checkpoint
+    # job and keeps ``n``, the number of band-buckets per set, so the
+    # skew-guard stats are still band-bucket counts, observed on that
+    # same job: worst bucket = max set size, over-cap buckets = sum of
+    # ``n`` over sets larger than the cap. The same job measures the
+    # expansion size, an upper bound on the distinct candidate pairs.
+    # The signature table is consumed once here, inside the same
+    # checkpoint job: its aggregation is the shuffle barrier that keeps
+    # the shingle pipeline out of the band expressions.
+    small = F.size("ids") <= max_bucket_size
+    stats = Observation()
+    grouped = (
+        _band_entries(sig, num_hashes, bands)
+        .groupBy("band", "bucket")
+        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
+        .filter(F.size("ids") > 1)
+        .groupBy("ids")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .observe(
+            stats,
+            F.max(F.size("ids")).alias("mx"),
+            F.sum(F.when(~small, F.col("n"))).alias("over"),
+            F.sum(
+                F.when(small, F.size("ids") * (F.size("ids") - 1) / 2)
+                .otherwise(F.size("ids") - 1)
+                .cast("long")
+            ).alias("pairs"),
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates()
+        .localCheckpoint(eager=True)
     )
-    return pairs
+    stats = stats.get
+    if stats["over"]:
+        logger.warning(
+            "LSH skew guard engaged: %d band-bucket(s) exceed "
+            "max_bucket_size=%d (worst observed bucket: %d members) — "
+            "degrading them to star edges; pass max_bucket_size=None "
+            "for exact all-pairs semantics",
+            int(stats["over"]),
+            int(max_bucket_size),
+            int(stats["mx"]),
+        )
+    # small and star sets expand in ONE projection: a union of two
+    # filtered branches plans (and compiles) the expansion twice
+    pairs = grouped.select(
+        F.explode(
+            F.expr(
+                f"IF(size(ids) <= {int(max_bucket_size)}, "
+                "flatten(transform(ids, (x, i) -> "
+                "transform(slice(ids, i + 2, size(ids)), "
+                "y -> struct(x AS id_a, y AS id_b)))), "
+                "transform(slice(ids, 2, size(ids) - 1), "
+                "y -> struct(ids[0] AS id_a, y AS id_b)))"
+            )
+        ).alias("p")
+    ).select("p.id_a", "p.id_b")
+    return pairs, int(stats["pairs"] or 0)
 
 
 def write_shingle_layout(
@@ -902,17 +924,29 @@ def _pair_relation_bytes(rel: DataFrame, n_rows: int) -> int:
     return n_rows * per_row
 
 
+def _payload_measures(arr_col: str) -> tuple[Column, Column]:
+    """Row count and total element count of an (id, <array>) relation —
+    the two measurements behind :func:`_payload_bytes`."""
+    return (
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(F.size(arr_col)), F.lit(0)).alias("e"),
+    )
+
+
+def _payload_bytes(measures, elem_bytes: int) -> int:
+    """Estimated in-memory size from :func:`_payload_measures` values."""
+    return int(measures["n"]) * 48 + int(measures["e"]) * elem_bytes
+
+
 def _payload_relation_bytes(rel: DataFrame, arr_col: str, elem_bytes: int) -> int:
     """Estimated in-memory size of an (id, <array>) payload relation:
     one narrow aggregate (count + total element count) over the
-    already-materialized (checkpointed / bucketed) relation — a cheap
-    real measurement, not a Catalyst estimate, because the verify-stage
-    broadcast gate must never flip on a bad stats guess."""
-    row = rel.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.size(arr_col)), F.lit(0)).alias("e"),
-    ).collect()[0]
-    return int(row["n"]) * 48 + int(row["e"]) * elem_bytes
+    already-materialized (bucketed) relation — a cheap real measurement,
+    not a Catalyst estimate, because the verify-stage broadcast gate must
+    never flip on a bad stats guess. A relation the dedup pipelines
+    materialize themselves is measured by observing the same two
+    aggregates on the job that materializes it (``Dataset.observe``)."""
+    return _payload_bytes(rel.agg(*_payload_measures(arr_col)).collect()[0], elem_bytes)
 
 
 #: Worker-side cache of the b-side shingle store's numpy views, keyed by
@@ -940,22 +974,34 @@ def _verify_store_np(tbl, key: int):
 
 
 def _verify_pairs_arrow(
-    sh: DataFrame, cands: DataFrame, broadcast_pairs_budget: int
+    store: DataFrame,
+    pairs: DataFrame,
+    a_side: DataFrame | None,
+    n_pairs: int | None,
+    broadcast_pairs_budget: int,
 ) -> DataFrame:
-    """(id_a, id_b, __na, __nb, __inter) for every candidate pair via
-    the r15 grouped Arrow merge-intersect kernel (guide §4.2/§8 —
-    VERDICT r14 #2).
+    """(id_a, id_b, __na, __nb, __inter) for every distinct candidate
+    pair via the r15 grouped Arrow merge-intersect kernel (guide §4.2/§8
+    — VERDICT r14 #2).
 
     Why: the shuffle-hash verify ships one document-sized shingle array
     PER PAIR into the pair-key join (~56 GB at the decade corpus) and
     then pays a per-pair hash-set ``array_intersect`` (measured ~11 s of
-    the 18 s verify on the r15 box; stage-isolated v0/v0_floor probe in
-    ``benchmarks/verify_kernel_probe.py``). Here the decision data moves
-    once per DOCUMENT instead: candidates group by ``id_a`` (bare-id
-    shuffle), the a-side array attaches once per group, and the b-side
-    table — SORTED arrays, ordered by id — broadcasts to the Python
-    workers, where intersections are counted with vectorized
-    ``np.searchsorted`` over each group's concatenated b-arrays.
+    the 18 s verify on the r15 box). Here the decision data moves once
+    per DOCUMENT instead: the ``store`` (id, sh) table — SORTED arrays,
+    ordered by id — broadcasts to the Python workers, candidate rows
+    (id_a, id_b; repeats allowed) group by ``id_a`` into one distinct
+    ``id_b`` set per group (bare-id shuffle), and intersections are
+    counted with vectorized ``np.searchsorted`` over each group's
+    concatenated b-arrays. The bare ids group first; then each group's
+    a-side array — from ``a_side`` (id, sh), else from ``store``'s own
+    relation — attaches once, so no array travels with a per-pair row.
+    The grouped bare ids broadcast into that attach only while
+    ``n_pairs``, a measured upper bound on the pairs (and so on the
+    groups), sizes them under ``broadcast_pairs_budget``; otherwise, or
+    when no bound was measured, the attach is a shuffle-hash join — in
+    place for pairs already hash-partitioned on ``id_a`` like a bucketed
+    ``a_side`` (the indexed probe).
 
     Bit-exactness: intersection COUNTS are integers — sorted-merge
     equality counting over the same distinct-element arrays returns
@@ -966,25 +1012,30 @@ def _verify_pairs_arrow(
     expressions. Pairs whose ids miss the store are dropped exactly as
     the inner attach joins drop them.
 
-    Scale gate lives in the CALLER: this path must only run when the
-    shingle relation fits ``shingle_broadcast_budget`` (the broadcast is
-    the whole table; past the budget the ceiling-free shuffle shape
-    runs instead)."""
-    spark = sh.sparkSession
+    The store is collected unsorted (a global ``orderBy`` would cost a
+    range-sampling job and a sort exchange) and sorted on the driver.
+    Its broadcast is registered for :func:`release_dedup_caches`, which
+    destroys it. Scale gate lives in :func:`_verify_pairs`: this path
+    only runs when the store fits ``shingle_broadcast_budget``."""
+    spark = store.sparkSession
     store_tbl = (
-        sh.select("id", F.sort_array("sh").alias("sh")).orderBy("id").toArrow()
+        store.select("id", F.sort_array("sh").alias("sh")).toArrow().sort_by("id")
     )
     bstore = spark.sparkContext.broadcast(store_tbl)
+    _TRACKED_PERSISTS.append(bstore)
     store_key = bstore._jbroadcast.id()
 
-    grouped = cands.groupBy("id_a").agg(F.collect_list("id_b").alias("ids"))
-    n_groups = grouped.count()
-    a_side = sh.select(
+    groups = pairs.groupBy("id_a").agg(F.collect_set("id_b").alias("ids"))
+    a_arrays = (store if a_side is None else a_side).select(
         F.col("id").alias("id_a"), F.sort_array("sh").alias("sh_a")
     )
-    with_a = _attach_pairs(
-        a_side, grouped, "id_a", n_groups, broadcast_pairs_budget
-    ).select("id_a", "sh_a", "ids")
+    if n_pairs is None:
+        rows = a_arrays.join(groups.hint("shuffle_hash"), "id_a")
+    else:
+        rows = _attach_pairs(
+            a_arrays, groups, "id_a", n_pairs, broadcast_pairs_budget,
+            elems=n_pairs,
+        )
 
     def kernel(batches):
         import numpy as np
@@ -1061,8 +1112,72 @@ def _verify_pairs_arrow(
                 names=["id_a", "id_b", "__na", "__nb", "__inter"],
             )
 
-    return with_a.mapInArrow(
+    return rows.select("id_a", "sh_a", "ids").mapInArrow(
         kernel, "id_a long, id_b long, __na long, __nb long, __inter long"
+    )
+
+
+def _verify_pairs(
+    store: DataFrame,
+    pairs: DataFrame,
+    store_bytes: int,
+    broadcast_pairs_budget: int,
+    shingle_broadcast_budget: int,
+    a_side: DataFrame | None = None,
+    n_pairs: int | None = None,
+) -> DataFrame:
+    """(id_a, id_b, jaccard) — exact shingle-set Jaccard of every distinct
+    candidate pair in ``pairs`` (id_a, id_b; repeats allowed; ``n_pairs``
+    a measured upper bound on their number, or None). ``store``
+    (id, sh) holds the b-side arrays, and the a-side ones unless
+    ``a_side`` (id, sh) is given. The one verify primitive of the minhash
+    family, with one gate: ``store_bytes`` — the store's MEASURED size
+    (:func:`_payload_bytes`) — against ``shingle_broadcast_budget``.
+
+    Under the budget the grouped Arrow kernel runs
+    (:func:`_verify_pairs_arrow`; ``n_pairs`` sizes its attach under
+    ``broadcast_pairs_budget``). Over it (or at budget 0) the
+    ceiling-free shuffle shape runs: the distinct pairs are materialized
+    and counted (:func:`_materialize_pairs`), each side's arrays attach
+    through :func:`_attach_pairs` under ``broadcast_pairs_budget``, and
+    the pair-key join is pinned shuffle-hash (the per-pair enriched a-side
+    is never a broadcast candidate at any scale: it is the largest
+    relation in the pipeline, and Catalyst's size estimate flipping a
+    join strategy on it late is exactly the plan instability this stage
+    must not have). Both shapes return the same pair set and the same
+    integer counts."""
+    if 0 < shingle_broadcast_budget and store_bytes <= shingle_broadcast_budget:
+        scored = _verify_pairs_arrow(
+            store, pairs, a_side, n_pairs, broadcast_pairs_budget
+        )
+    else:
+        cands, n_pairs = _materialize_pairs(pairs.dropDuplicates())
+        a = (store if a_side is None else a_side).select(
+            F.col("id").alias("id_a"), F.col("sh").alias("sh_a")
+        )
+        b = store.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+        with_a = _attach_pairs(
+            a, cands, "id_a", n_pairs, broadcast_pairs_budget
+        ).select("id_a", "id_b", "sh_a")
+        with_b = _attach_pairs(
+            b,
+            cands.select("id_b").dropDuplicates(),
+            "id_b",
+            n_pairs,
+            broadcast_pairs_budget,
+        ).select("id_b", "sh_b")
+        scored = with_a.join(with_b.hint("shuffle_hash"), "id_b").select(
+            "id_a",
+            "id_b",
+            F.size("sh_a").alias("__na"),
+            F.size("sh_b").alias("__nb"),
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("__inter"),
+        )
+    inter = F.col("__inter").cast("double")
+    return scored.select(
+        "id_a",
+        "id_b",
+        (inter / (F.col("__na") + F.col("__nb") - F.col("__inter"))).alias("jaccard"),
     )
 
 
@@ -1085,7 +1200,12 @@ def _materialize_pairs(cands: DataFrame) -> tuple[DataFrame, int]:
 
 
 def _attach_pairs(
-    side: DataFrame, rel: DataFrame, key: str, n_rows: int, budget_bytes: int
+    side: DataFrame,
+    rel: DataFrame,
+    key: str,
+    n_rows: int,
+    budget_bytes: int,
+    elems: int = 0,
 ) -> DataFrame:
     """Join ``side`` (per-document payloads) with ``rel`` (bare candidate
     ids/pairs) on ``key``, choosing the join strategy by MEASURED size.
@@ -1096,8 +1216,10 @@ def _attach_pairs(
     sides shuffle by id, which costs one pass of the payload table but
     has no ceiling — the broadcast path dies past ~8 GB of pairs. Never
     sort-merge: the payload side carries document-sized arrays that a
-    sort would spill pointlessly."""
-    est = _pair_relation_bytes(rel, n_rows)
+    sort would spill pointlessly. ``elems`` counts the array elements
+    ``rel`` carries (8 bytes each), e.g. the member ids of grouped
+    pairs."""
+    est = _pair_relation_bytes(rel, n_rows) + 8 * elems
     if budget_bytes > 0 and est <= budget_bytes:
         return side.join(F.broadcast(rel), key)
     logger.info(
@@ -1132,18 +1254,21 @@ def minhash_dedup_pairs(
     candidate stage's skew guard (see ``minhash_lsh_candidates``; guard
     ON by default, ``None`` = exact oracle mode).
 
-    ``broadcast_pairs_budget`` gates the verify-stage attach joins: the
-    candidate-pair relation is counted after materialization and
-    broadcast only while its estimated size fits the budget; past it the
-    attaches become shuffle-hash joins on the id key, which cost one
-    shuffle of the shingle table but survive any pair count (a fixed
-    broadcast dies at the 8 GB ceiling on a real corpus — VERDICT r11
-    #1). ``shingle_table`` (written by :func:`write_shingle_layout`,
-    bucketed by id) replaces the in-memory shingle recompute+checkpoint:
-    reuse becomes fault-tolerant (a table scan, not pinned executor
-    blocks) and every id-keyed consumer — the signature groupBy and the
-    over-budget attach joins — reads the bucketed distribution instead
-    of shuffling.
+    ``broadcast_pairs_budget`` gates the attach joins of the over-budget
+    verify shape (see :func:`_verify_pairs`): the candidate-pair
+    relation is counted after materialization and broadcast only while
+    its estimated size fits the budget; past it the attaches become
+    shuffle-hash joins on the id key, which cost one shuffle of the
+    shingle table but survive any pair count (a fixed broadcast dies at
+    the 8 GB ceiling on a real corpus — VERDICT r11 #1). The Arrow verify
+    broadcasts its grouped bare ids under the same budget, sized from an
+    upper bound on the pairs that the candidate stage's checkpoint job
+    measures. ``shingle_table`` (written by
+    :func:`write_shingle_layout`, bucketed by id) replaces the in-memory
+    shingle recompute+checkpoint: reuse becomes fault-tolerant (a table
+    scan, not pinned executor blocks) and every id-keyed consumer — the
+    signature groupBy and the over-budget attach joins — reads the
+    bucketed distribution instead of shuffling.
 
     ``shingle_table="auto"`` (the default, r13) probes the layout
     database for a stored table whose recorded source fingerprint
@@ -1156,87 +1281,42 @@ def minhash_dedup_pairs(
     under it the b-side shingle table broadcasts so the per-pair
     enriched relation never crosses an exchange (guide §8 — the decision
     data is one array per DOCUMENT; the heavy per-PAIR bytes move zero
-    times); over it the pair-key shuffle-hash join runs as before. See
+    times); over it the pair-key shuffle-hash join runs as before. The
+    table's size is observed on the job that checkpoints the inline
+    shingles (one aggregate job over a stored table). See
     ``DEFAULT_SHINGLE_BROADCAST_BUDGET`` for the measured rationale."""
     if shingle_table == "auto":
         shingle_table = find_shingle_layout(df, text_col, id_col, shingle_n)
     if shingle_table is not None:
         _check_shingle_meta(df.sparkSession, shingle_table, shingle_n)
         sh = df.sparkSession.table(shingle_table).select("id", "sh")
+        sh_bytes = None
     else:
         # shingle+hash each document exactly once: the checkpointed
         # (id, array<long>) table feeds BOTH the signature/banding
-        # pipeline and the Jaccard verification joins (at 100 TB this is
-        # the difference between one and two full-corpus tokenization
+        # pipeline and the Jaccard verification (at 100 TB this is the
+        # difference between one and two full-corpus tokenization
         # passes, and long arrays checkpoint/intersect ~25 % cheaper than
         # string arrays — see _hashed_shingle_arrays for the collision
-        # analysis)
-        sh = _hashed_shingle_arrays(df, text_col, id_col, shingle_n).localCheckpoint(
-            eager=True
+        # analysis). The checkpoint job also measures the verify gate's
+        # payload size, by observation.
+        sh_size = Observation()
+        sh = (
+            _hashed_shingle_arrays(df, text_col, id_col, shingle_n)
+            .observe(sh_size, *_payload_measures("sh"))
+            .localCheckpoint(eager=True)
         )
-    cands = minhash_lsh_candidates(
-        df, text_col, id_col, num_hashes, bands, shingle_n,
-        max_bucket_size=max_bucket_size, _hashed_shingles=sh,
+        sh_bytes = _payload_bytes(sh_size.get, 8)
+    pairs, n_pairs = _lsh_pair_rows(
+        df, text_col, id_col, num_hashes, bands, shingle_n, max_bucket_size,
+        _hashed_shingles=sh,
     )
-    a = sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a")
-    b = sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b")
-    # Broadcast decisions here are ALL measured, never Catalyst
-    # estimates: the bare (id_a, id_b) candidate list broadcasts only
-    # under broadcast_pairs_budget (see _attach_pairs), and the b-side
-    # shingle TABLE (one array per document — NOT the per-pair enriched
-    # relation) broadcasts only under shingle_broadcast_budget. The
-    # per-PAIR enriched a-side is never a broadcast candidate at any
-    # scale: it is the largest relation in the pipeline, and Catalyst's
-    # size estimate flipping a join strategy on it late is exactly the
-    # plan instability this stage must not have — hence the explicit
-    # shuffle_hash pin on the fallback shape.
-    cands, n_pairs = _materialize_pairs(cands)
-    jac = (
-        F.col("__inter") / (F.col("__na") + F.col("__nb") - F.col("__inter"))
-    ).alias("jaccard")
-    # r15 (guide §8/§4.2): the shuffle shape ships one shingle array PER
-    # PAIR into the pair-key join (~56 GB at the decade corpus) and pays
-    # a per-pair hash-set intersect. Under the MEASURED budget, route
-    # the verify through the grouped Arrow merge-intersect kernel
-    # instead (see _verify_pairs_arrow — arrays move once per document,
-    # intersections count via vectorized sorted search, bit-identical
-    # integer counts); over budget, the ceiling-free shuffle-hash shape
-    # runs unchanged.
-    if (
-        shingle_broadcast_budget > 0
-        and _payload_relation_bytes(sh, "sh", 8) <= shingle_broadcast_budget
-    ):
-        scored = _verify_pairs_arrow(sh, cands, broadcast_pairs_budget).select(
-            "id_a",
-            "id_b",
-            F.col("__na"),
-            F.col("__nb"),
-            F.col("__inter").cast("double").alias("__inter"),
-        )
-    else:
-        inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        with_a = _attach_pairs(
-            a, cands, "id_a", n_pairs, broadcast_pairs_budget
-        ).select("id_a", "id_b", "sh_a")
-        with_b = _attach_pairs(
-            b,
-            cands.select("id_b").dropDuplicates(),
-            "id_b",
-            n_pairs,
-            broadcast_pairs_budget,
-        ).select("id_b", "sh_b")
-        scored = with_a.join(with_b.hint("shuffle_hash"), "id_b").select(
-            "id_a",
-            "id_b",
-            F.size("sh_a").alias("__na"),
-            F.size("sh_b").alias("__nb"),
-            inter.alias("__inter"),
-        )
-    return (
-        scored
-        .select("id_a", "id_b", jac)
-        .filter(F.col("jaccard") >= threshold)
-    )
+    if sh_bytes is None and shingle_broadcast_budget > 0:
+        sh_bytes = _payload_relation_bytes(sh, "sh", 8)
+    return _verify_pairs(
+        sh, pairs, sh_bytes, broadcast_pairs_budget, shingle_broadcast_budget,
+        n_pairs=n_pairs,
+    ).filter(F.col("jaccard") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1776,7 +1856,9 @@ def connected_components(
     NOT silently reported as converged).
 
     Small-graph fast path: when the (already LSH-filtered, verified) dup
-    graph has ≤ ``driver_threshold`` directed edges, the edge LIST — never
+    graph has ≤ ``driver_threshold`` distinct directed edges — counted by
+    observing the job that checkpoints the edge table, not by a second
+    count job — the edge LIST — never
     the documents — collects to the driver VIA ARROW (``toArrow()``: two
     int64 numpy columns, ~16 B/edge → 500k edges ≈ 8 MB on the wire, no
     Row-object materialization, and no session-conf toggling — safe under
@@ -1819,7 +1901,12 @@ def connected_components(
         )
         .select("e.u", "e.v")
         .dropDuplicates()
-        .localCheckpoint(eager=True)
+    )
+    # the edge count that gates the driver path is observed on the
+    # checkpoint job itself, not counted by a second one
+    size = Observation()
+    edges = edges.observe(size, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
     )
     # Size the iterative stage to the graph, not the global shuffle
     # setting: each round is 2 joins + a checkpoint over (long,long)
@@ -1827,7 +1914,7 @@ def connected_components(
     # pays ~100 empty-task launches per round. ~100k edges/partition keeps
     # partitions MB-sized; the configured shuffle parallelism stays the
     # ceiling so cluster-scale graphs keep cluster-scale parallelism.
-    n_edges = edges.count()  # free: edges were just checkpointed
+    n_edges = int(size.get["n"])
     if n_edges <= driver_threshold:
         # DataFrame.toArrow() (Spark 4) always ships Arrow batches —
         # no session conf involved, so nothing to toggle and no race
@@ -2295,14 +2382,19 @@ def incremental_dedup_indexed(
     INDEX's recorded metadata (probing under different parameters would
     silently miss every near-duplicate, so they are not arguments).
     Every stage touches the base only through its bucketed artifacts:
-    exact pass = delta fingerprints joined co-located against the fp
-    table; near pass = delta band entries probe the lsh table co-located
-    on (band, bucket), candidates are (delta doc × stored bucket member)
-    — base × base pairs never exist — and verification pulls only the
-    candidate base ids' shingle arrays (size-gated attach, see
-    ``_attach_pairs``). Returns (id, dup_of, match_kind) exactly like
-    ``incremental_dedup``; recall differences exist only where a bucket
-    cap engaged. ``max_bucket_size`` here caps the DELTA side's band
+    exact pass = delta fingerprints joined against the fp table; near
+    pass = the delta's per-(band, bucket) member lists probe the lsh
+    table on (band, bucket), candidates are (stored bucket member × delta
+    doc) — base × base pairs never exist — and verification
+    (:func:`_verify_pairs`, the same primitive as ``minhash_dedup_pairs``)
+    reads each candidate base doc's array from the id-bucketed shingle
+    table once, against the checkpointed delta shingles as the broadcast
+    store; the delta's payload size, observed on its checkpoint job, is
+    the store's gate against ``DEFAULT_SHINGLE_BROADCAST_BUDGET``. Exact
+    and near matches merge with the delta's ids in one grouping. Returns
+    (id, dup_of, match_kind) exactly like ``incremental_dedup``; recall
+    differences exist only where a bucket cap engaged.
+    ``max_bucket_size`` here caps the DELTA side's band
     entries at query time (lowest ids kept) — the mirror of the index's
     write-time cap: candidate count per (band, bucket) is then bounded
     by delta-cap × index-cap even when a boilerplate-heavy batch lands
@@ -2317,6 +2409,8 @@ def incremental_dedup_indexed(
     re-indexing the base.
     """
     import json as _json
+
+    from truthound_spark.layout import _bucket_spec
 
     spark = new_df.sparkSession
     if isinstance(index, str):
@@ -2372,70 +2466,82 @@ def incremental_dedup_indexed(
     bfp = spark.table(index["fingerprints"]).select(
         F.col("id").alias("base_id"), "fp"
     )
-    exact = nfp.join(bfp, "fp").groupBy("id").agg(F.min("base_id").alias("exact_of"))
+    no_match = F.lit(None).cast("long")
+    exact = nfp.join(bfp, "fp").select(
+        "id", F.col("base_id").alias("exact_of"), no_match.alias("near_of")
+    )
 
-    # near pass: delta-only shingles + signatures + band entries
-    # (persist tracked — release_dedup_caches)
-    sh_new = _persist_tracked(
+    # near pass: delta-only shingles, checkpointed once; the checkpoint
+    # job also measures the verify store's payload size, by observation
+    sh_size = Observation()
+    sh_new = (
         _hashed_shingle_arrays(new_docs, "__t", "id", shingle_n)
+        .observe(sh_size, *_payload_measures("sh"))
+        .localCheckpoint(eager=True)
     )
     sig_new = minhash_signatures(
         new_docs, "__t", "id", num_hashes, shingle_n, _hashed_shingles=sh_new
     )
-    e_new = _band_entries(sig_new, num_hashes, bands)
+    # the delta's member ids per (band, bucket), lowest ``max_bucket_size``
+    # kept, grouped in the lsh table's bucket layout: the probe join below
+    # reads both sides in place (no exchange, no broadcast)
+    entries = _band_entries(sig_new, num_hashes, bands)
+    lsh_spec = _bucket_spec(spark, index["lsh"])
+    if lsh_spec is not None and lsh_spec[1] == ["band", "bucket"]:
+        entries = entries.repartition(lsh_spec[0], "band", "bucket")
+    ids = F.sort_array(F.collect_list("id"))
     if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "bucket").orderBy("id")
-        e_new = (
-            e_new.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= max_bucket_size)
-            .drop("__rn")
-        )
+        ids = F.slice(ids, 1, max_bucket_size)
+    e_new = entries.groupBy("band", "bucket").agg(ids.alias("ids"))
     idx = spark.table(index["lsh"]).select(
-        "band", "bucket", F.col("id").alias("base_id")
+        "band", "bucket", F.col("id").alias("id_a")
     )
-    cands = (
-        e_new.join(idx, ["band", "bucket"])
-        .select("id", "base_id")
-        .dropDuplicates()
+    # candidates are (stored base doc, delta doc), checkpointed: their
+    # job runs the signature and banding stages first, as the
+    # self-dedup's candidate checkpoint does, so both calls compile the
+    # same classes for them. The delta is the verify store
+    # (delta-sized), and each candidate base doc's array is read from
+    # the id-bucketed shingle table once (see _verify_pairs); the pairs
+    # are laid out in that table's bucket layout, so the table is not
+    # shuffled
+    pairs = (
+        idx.join(e_new.hint("shuffle_hash"), ["band", "bucket"])
+        .select("id_a", F.explode("ids").alias("id_b"))
+        .localCheckpoint(eager=True)
     )
-    cands, n_cands = _materialize_pairs(cands)
-    a = sh_new.select("id", F.col("sh").alias("sh_a"))
-    b = spark.table(index["shingles"]).select(
-        F.col("id").alias("base_id"), F.col("sh").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    jac = inter / (
-        F.size("sh_a") + F.size("sh_b") - F.size(F.array_intersect("sh_a", "sh_b"))
-    )
-    near = (
-        _attach_pairs(a, cands, "id", n_cands, broadcast_pairs_budget)
-        .join(
-            _attach_pairs(
-                b,
-                cands.select("base_id").dropDuplicates(),
-                "base_id",
-                n_cands,
-                broadcast_pairs_budget,
-            ).hint("shuffle_hash"),
-            "base_id",
+    sh_spec = _bucket_spec(spark, index["shingles"])
+    if sh_spec is not None and sh_spec[1] == ["id"]:
+        pairs = pairs.repartition(sh_spec[0], "id_a")
+    near = _verify_pairs(
+        sh_new,
+        pairs,
+        _payload_bytes(sh_size.get, 8),
+        broadcast_pairs_budget,
+        DEFAULT_SHINGLE_BROADCAST_BUDGET,
+        a_side=spark.table(index["shingles"]).select("id", "sh"),
+    ).filter(F.col("jaccard") >= threshold)
+    # exact and near matches merge with the delta's ids in ONE grouping
+    # (no per-pass groupBy, no left joins): each new doc gets the lowest
+    # base id of either kind
+    matches = (
+        new_docs.select("id", no_match.alias("exact_of"), no_match.alias("near_of"))
+        .unionByName(exact)
+        .unionByName(
+            near.select(
+                F.col("id_b").alias("id"),
+                no_match.alias("exact_of"),
+                F.col("id_a").alias("near_of"),
+            )
         )
-        .filter(jac >= threshold)
         .groupBy("id")
-        .agg(F.min("base_id").alias("near_of"))
+        .agg(F.min("exact_of").alias("exact_of"), F.min("near_of").alias("near_of"))
     )
-    return (
-        new_docs.select("id")
-        .join(exact, "id", "left")
-        .join(near, "id", "left")
-        .select(
-            "id",
-            F.coalesce("exact_of", "near_of").alias("dup_of"),
-            F.when(F.col("exact_of").isNotNull(), F.lit("exact"))
-            .when(F.col("near_of").isNotNull(), F.lit("near"))
-            .alias("match_kind"),
-        )
+    return matches.select(
+        "id",
+        F.coalesce("exact_of", "near_of").alias("dup_of"),
+        F.when(F.col("exact_of").isNotNull(), F.lit("exact"))
+        .when(F.col("near_of").isNotNull(), F.lit("near"))
+        .alias("match_kind"),
     )
 
 
