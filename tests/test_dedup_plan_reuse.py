@@ -7,20 +7,24 @@ by needing few distinct generated classes. A warm ``dedup_clusters`` +
 recompiles its classes on every call. The gates that measure sizes on the
 jobs that materialize a relation (``Dataset.observe``) must report the same
 numbers as the separate measurements they replace, and the verify store's
-broadcast must be released.
+broadcast must be released. The verify kernel runs in as few Python tasks as
+its measured pair bound needs: each task pays a fixed worker start-up cost.
 """
 
 import random
 
 import pytest
 from pyspark.sql import Observation
+from pyspark.sql import functions as F
 
+from truthound_spark.pipeline import dedup
 from truthound_spark.pipeline.dedup import (
     _TRACKED_PERSISTS,
     _hashed_shingle_arrays,
     _payload_bytes,
     _payload_measures,
     _payload_relation_bytes,
+    _verify_pairs,
     connected_components,
     dedup_clusters,
     incremental_dedup_indexed,
@@ -29,7 +33,7 @@ from truthound_spark.pipeline.dedup import (
     write_dedup_index,
 )
 
-DEDUP_CLUSTERS_JOBS = 20
+DEDUP_CLUSTERS_JOBS = 13
 PROBE_JOBS = 10
 # Classes a warm round may recompile. Which classes fall out depends on how
 # their keys hash into the cache's segments, and that changes with every
@@ -178,3 +182,47 @@ def test_cc_branch_flips_exactly_at_edge_count(spark):
     assert labels == dist_labels == {
         (1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 4), (7, 7), (8, 7)
     }
+
+
+def _kernel_partitions(df) -> int:
+    """Partitions of the frame fed to the verify kernel: every operator
+    above ``MapInArrow kernel(`` is narrow, so the output has as many."""
+    qe = df._jdf.queryExecution()
+    n = qe.toRdd().getNumPartitions()
+    assert "MapInArrow kernel(" in qe.executedPlan().toString()
+    return n
+
+
+def test_verify_kernel_runs_one_python_task_under_the_pair_bound(spark, corpus):
+    base_df = corpus[0]
+    assert base_df.rdd.getNumPartitions() > 1
+    release_dedup_caches()
+    arrow = minhash_dedup_pairs(base_df, threshold=0.7)
+    assert _kernel_partitions(arrow) == 1
+    exact = minhash_dedup_pairs(base_df, threshold=0.7, shingle_broadcast_budget=0)
+    assert set(map(tuple, arrow.collect())) == set(map(tuple, exact.collect()))
+    release_dedup_caches()
+
+
+def test_verify_kernel_keeps_partitions_at_or_over_the_bound(spark):
+    per_task = dedup.VERIFY_PAIRS_PER_TASK
+    store = spark.range(0, 64, 1, 4).select(
+        "id", F.array("id", F.col("id") + 1).alias("sh")
+    )
+    pairs = spark.range(63).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    expected = {(i, i + 1, 1 / 3) for i in range(63)}
+    for bound, parts in (
+        (8 * per_task, 4), (4 * per_task, 4), (2 * per_task, 2),
+        (per_task - 1, 1), (0, 1),
+    ):
+        scored = _verify_pairs(
+            store, pairs, 1,
+            dedup.DEFAULT_PAIR_BROADCAST_BUDGET,
+            dedup.DEFAULT_SHINGLE_BROADCAST_BUDGET,
+            n_pairs=bound,
+        )
+        assert _kernel_partitions(scored) == parts, bound
+        assert set(map(tuple, scored.collect())) == expected
+        release_dedup_caches()

@@ -75,6 +75,29 @@ class TestBroadcastBudgetGate:
             "Broadcast" not in ln for ln in attach_lines
         ), attach_lines
 
+    def test_set_similarity_gate_measures_string_bytes(self, spark):
+        # 20 sets of 4 distinct 1,000-byte strings: 81,600 B by their real
+        # length, 3,520 B at a flat 32 B per element. Under a 10,000 B
+        # budget the verify join must not broadcast them
+        toks = [f"{t:04d}" * 250 for t in range(8)]
+        sets = spark.createDataFrame(
+            [(i, toks[i % 5 : i % 5 + 4]) for i in range(20)],
+            "doc_id long, toks array<string>",
+        )
+
+        def run(**budgets):
+            pairs = set_similarity_join(sets, "toks", "doc_id", 0.5, **budgets)
+            got = _pairs_set(pairs)
+            plan = pairs._jdf.queryExecution().executedPlan().toString()
+            return got, [ln for ln in plan.splitlines() if "Join" in ln and "id_b" in ln]
+
+        base, _ = run()
+        tight, joins = run(shingle_broadcast_budget=10_000)
+        off, _ = run(broadcast_pairs_budget=0, shingle_broadcast_budget=0)
+        assert joins and all("ShuffledHashJoin" in ln for ln in joins), joins
+        assert base == tight == off
+        assert len(base) == 94  # 30 identical pairs, 64 at 3/5
+
     def test_shingle_broadcast_gate_results_and_plan(self, docs):
         # r15 verify-join gate (guide §8): under the measured shingle
         # budget the pair-key join is a BroadcastHashJoin against the

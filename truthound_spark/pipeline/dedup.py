@@ -73,6 +73,20 @@ DEFAULT_PAIR_BROADCAST_BUDGET = 64 << 20
 #: path entirely.
 DEFAULT_SHINGLE_BROADCAST_BUDGET = 2 << 30
 
+#: Candidate pairs per Python task of the verify kernel
+#: (:func:`_verify_pairs_arrow`). Each task pays a fixed ~0.24 s of worker
+#: CPU before it reads a row — PySpark's per-task
+#: ``importlib.invalidate_caches()`` makes every cached zipimporter
+#: re-read the central directory of ``pyspark.zip`` — while the kernel
+#: costs 7-62 µs per pair (groups of 16 down to 1 member, 58-200-element
+#: shingle arrays, one core of a 4-core x86 VM). At 2^16 pairs a task does
+#: at least 0.45 s of kernel work, about twice its fixed cost, so the
+#: kernel's input is coalesced to ``ceil(bound / VERIFY_PAIRS_PER_TASK)``
+#: partitions when a pair bound was measured. ``coalesce`` never raises
+#: the partition count: a stage of 4 partitions narrows only below ~262k
+#: pairs, and a corpus of millions of pairs keeps its parallelism.
+VERIFY_PAIRS_PER_TASK = 1 << 16
+
 #: Cap on the number of input files whose (length, mtime) statuses a
 #: layout-probe source fingerprint will fetch (VERDICT r14 #4: one
 #: listStatus per distinct parent dir is unbounded for a multi-partition
@@ -924,18 +938,33 @@ def _pair_relation_bytes(rel: DataFrame, n_rows: int) -> int:
     return n_rows * per_row
 
 
-def _payload_measures(arr_col: str) -> tuple[Column, Column]:
-    """Row count and total element count of an (id, <array>) relation —
-    the two measurements behind :func:`_payload_bytes`."""
-    return (
+def _payload_measures(arr_col: str, strings: bool = False) -> tuple[Column, ...]:
+    """Row count and total element count of an (id, <array>) relation,
+    plus, for string or binary elements (``strings``), their summed byte
+    length — the measurements behind :func:`_payload_bytes`."""
+    measures = (
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.size(arr_col)), F.lit(0)).alias("e"),
     )
+    if strings:
+        octets = F.aggregate(
+            arr_col,
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + F.coalesce(F.octet_length(x), F.lit(0)),
+        )
+        measures += (F.coalesce(F.sum(octets), F.lit(0)).alias("o"),)
+    return measures
 
 
-def _payload_bytes(measures, elem_bytes: int) -> int:
-    """Estimated in-memory size from :func:`_payload_measures` values."""
-    return int(measures["n"]) * 48 + int(measures["e"]) * elem_bytes
+def _payload_bytes(measures: dict, elem_bytes: int) -> int:
+    """Estimated in-memory size from :func:`_payload_measures` values:
+    48 B a row, ``elem_bytes`` an element, plus the elements' own bytes
+    where they were measured."""
+    return (
+        int(measures["n"]) * 48
+        + int(measures["e"]) * elem_bytes
+        + int(measures.get("o", 0))
+    )
 
 
 def _payload_relation_bytes(rel: DataFrame, arr_col: str, elem_bytes: int) -> int:
@@ -946,7 +975,9 @@ def _payload_relation_bytes(rel: DataFrame, arr_col: str, elem_bytes: int) -> in
     never flip on a bad stats guess. A relation the dedup pipelines
     materialize themselves is measured by observing the same two
     aggregates on the job that materializes it (``Dataset.observe``)."""
-    return _payload_bytes(rel.agg(*_payload_measures(arr_col)).collect()[0], elem_bytes)
+    return _payload_bytes(
+        rel.agg(*_payload_measures(arr_col)).collect()[0].asDict(), elem_bytes
+    )
 
 
 #: Worker-side cache of the b-side shingle store's numpy views, keyed by
@@ -979,6 +1010,7 @@ def _verify_pairs_arrow(
     a_side: DataFrame | None,
     n_pairs: int | None,
     broadcast_pairs_budget: int,
+    kernel_pairs: int | None,
 ) -> DataFrame:
     """(id_a, id_b, __na, __nb, __inter) for every distinct candidate
     pair via the r15 grouped Arrow merge-intersect kernel (guide §4.2/§8
@@ -1002,6 +1034,15 @@ def _verify_pairs_arrow(
     when no bound was measured, the attach is a shuffle-hash join — in
     place for pairs already hash-partitioned on ``id_a`` like a bucketed
     ``a_side`` (the indexed probe).
+
+    The kernel's Python stage is sized from ``kernel_pairs``, a measured
+    upper bound on the pairs: its input is coalesced to
+    ``max(1, ceil(kernel_pairs / VERIFY_PAIRS_PER_TASK))`` partitions, so a
+    small verify runs in one Python task instead of one per input
+    partition (each task costs ~0.24 s of worker CPU before its first row,
+    the kernel 7-62 µs per pair; see ``VERIFY_PAIRS_PER_TASK``).
+    Coalescing only merges partitions, so no row changes group; with no
+    bound the partitioning is left as it is.
 
     Bit-exactness: intersection COUNTS are integers — sorted-merge
     equality counting over the same distinct-element arrays returns
@@ -1036,6 +1077,9 @@ def _verify_pairs_arrow(
             a_arrays, groups, "id_a", n_pairs, broadcast_pairs_budget,
             elems=n_pairs,
         )
+    rows = rows.select("id_a", "sh_a", "ids")
+    if kernel_pairs is not None:
+        rows = rows.coalesce(max(1, -(-kernel_pairs // VERIFY_PAIRS_PER_TASK)))
 
     def kernel(batches):
         import numpy as np
@@ -1112,7 +1156,7 @@ def _verify_pairs_arrow(
                 names=["id_a", "id_b", "__na", "__nb", "__inter"],
             )
 
-    return rows.select("id_a", "sh_a", "ids").mapInArrow(
+    return rows.mapInArrow(
         kernel, "id_a long, id_b long, __na long, __nb long, __inter long"
     )
 
@@ -1125,10 +1169,14 @@ def _verify_pairs(
     shingle_broadcast_budget: int,
     a_side: DataFrame | None = None,
     n_pairs: int | None = None,
+    kernel_pairs: int | None = None,
 ) -> DataFrame:
     """(id_a, id_b, jaccard) — exact shingle-set Jaccard of every distinct
     candidate pair in ``pairs`` (id_a, id_b; repeats allowed; ``n_pairs``
-    a measured upper bound on their number, or None). ``store``
+    a measured upper bound on their number, or None). ``kernel_pairs``,
+    when given, is a measured bound that sizes only the kernel's Python
+    stage and leaves the attach joins as they are; it defaults to
+    ``n_pairs``. ``store``
     (id, sh) holds the b-side arrays, and the a-side ones unless
     ``a_side`` (id, sh) is given. The one verify primitive of the minhash
     family, with one gate: ``store_bytes`` — the store's MEASURED size
@@ -1136,11 +1184,12 @@ def _verify_pairs(
 
     Under the budget the grouped Arrow kernel runs
     (:func:`_verify_pairs_arrow`; ``n_pairs`` sizes its attach under
-    ``broadcast_pairs_budget``). Over it (or at budget 0) the
-    ceiling-free shuffle shape runs: the distinct pairs are materialized
-    and counted (:func:`_materialize_pairs`), each side's arrays attach
-    through :func:`_attach_pairs` under ``broadcast_pairs_budget``, and
-    the pair-key join is pinned shuffle-hash (the per-pair enriched a-side
+    ``broadcast_pairs_budget``, and the pair bound narrows its Python
+    stage to one task per ``VERIFY_PAIRS_PER_TASK`` pairs). Over it (or at
+    budget 0) the ceiling-free shuffle shape runs: the distinct pairs are
+    materialized and counted (:func:`_materialize_pairs`), each side's
+    arrays attach through :func:`_attach_pairs` under
+    ``broadcast_pairs_budget``, and the pair-key join is pinned shuffle-hash (the per-pair enriched a-side
     is never a broadcast candidate at any scale: it is the largest
     relation in the pipeline, and Catalyst's size estimate flipping a
     join strategy on it late is exactly the plan instability this stage
@@ -1148,7 +1197,8 @@ def _verify_pairs(
     integer counts."""
     if 0 < shingle_broadcast_budget and store_bytes <= shingle_broadcast_budget:
         scored = _verify_pairs_arrow(
-            store, pairs, a_side, n_pairs, broadcast_pairs_budget
+            store, pairs, a_side, n_pairs, broadcast_pairs_budget,
+            n_pairs if kernel_pairs is None else kernel_pairs,
         )
     else:
         cands, n_pairs = _materialize_pairs(pairs.dropDuplicates())
@@ -1403,7 +1453,11 @@ def set_similarity_join(
     budget the attach degrades to a shuffle-hash join on id — a pair
     relation has no broadcast ceiling that way); the enriched sides meet
     in a shuffle join, never a broadcast of payloads. Verification is
-    exact array_intersect Jaccard.
+    exact array_intersect Jaccard. The per-set payload broadcasts into
+    the verify join only while its size — measured on the job that
+    checkpoints the sets, string and binary elements by their real byte
+    length — fits ``shingle_broadcast_budget``; over it the verify join is
+    shuffle-hash.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b."""
     if not 0.0 < threshold <= 1.0:
@@ -1412,14 +1466,22 @@ def set_similarity_join(
     # be arbitrarily expensive (e.g. the shingle macro), and it feeds the
     # frequency count, the prefix index AND both verification lookups —
     # without the checkpoint Catalyst inlines it into every consumer
-    # (measured 30x on the sf0.1 shingle entry)
-    sets = (
-        df.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.array_distinct(F.col(set_col)).alias("__s"),
-        )
-        .filter(F.size("__s") > 0)
-        .localCheckpoint(eager=True)
+    # (measured 30x on the sf0.1 shingle entry). The checkpoint job also
+    # measures the sets' payload for the verify gate below: string and
+    # binary elements by their real byte length, plus an 8 B slot each
+    import pyspark.sql.types as T
+
+    sets = df.select(
+        F.col(id_col).cast("long").alias("id"),
+        F.array_distinct(F.col(set_col)).alias("__s"),
+    ).filter(F.size("__s") > 0)
+    elem = sets.schema["__s"].dataType.elementType
+    strings = isinstance(elem, (T.StringType, T.BinaryType))
+    numeric = isinstance(elem, (T.LongType, T.IntegerType, T.DoubleType))
+    elem_bytes = 8 if strings or numeric else 32
+    sets_size = Observation()
+    sets = sets.observe(sets_size, *_payload_measures("__s", strings)).localCheckpoint(
+        eager=True
     )
     toks = sets.select("id", F.explode_outer("__s").alias("tok")).filter(
         F.col("tok").isNotNull()
@@ -1472,13 +1534,9 @@ def set_similarity_join(
     # per-pair enriched a-side never crosses an exchange; over budget the
     # pair-key join stays pinned shuffle_hash (never let a size estimate
     # broadcast document-sized set payloads late at real scale).
-    import pyspark.sql.types as T
-
-    elem = sets.schema["__s"].dataType.elementType
-    elem_bytes = 8 if isinstance(elem, (T.LongType, T.IntegerType, T.DoubleType)) else 32
     if (
         shingle_broadcast_budget > 0
-        and _payload_relation_bytes(sets, "__s", elem_bytes)
+        and _payload_bytes(sets_size.get, elem_bytes)
         <= shingle_broadcast_budget
     ):
         enriched = with_a.join(F.broadcast(wb), "id_b")
@@ -2390,7 +2448,12 @@ def incremental_dedup_indexed(
     reads each candidate base doc's array from the id-bucketed shingle
     table once, against the checkpointed delta shingles as the broadcast
     store; the delta's payload size, observed on its checkpoint job, is
-    the store's gate against ``DEFAULT_SHINGLE_BROADCAST_BUDGET``. Exact
+    the store's gate against ``DEFAULT_SHINGLE_BROADCAST_BUDGET``. The
+    candidate rows, counted on the job that checkpoints them, bound the
+    pairs and size the kernel's Python stage: one task per
+    ``VERIFY_PAIRS_PER_TASK`` (2^16, where a task's kernel work at 7 µs a
+    pair is twice its ~0.24 s fixed start-up cost), so a delta-sized probe
+    runs one Python task instead of one per bucket. Exact
     and near matches merge with the delta's ids in one grouping. Returns
     (id, dup_of, match_kind) exactly like ``incremental_dedup``; recall
     differences exist only where a bucket cap engaged.
@@ -2503,10 +2566,14 @@ def incremental_dedup_indexed(
     # (delta-sized), and each candidate base doc's array is read from
     # the id-bucketed shingle table once (see _verify_pairs); the pairs
     # are laid out in that table's bucket layout, so the table is not
-    # shuffled
+    # shuffled. The same job counts the candidate rows, an upper bound on
+    # the pairs that sizes the kernel's Python stage; it is not passed as
+    # ``n_pairs``, which would switch the in-place attach to a broadcast
+    n_cands = Observation()
     pairs = (
         idx.join(e_new.hint("shuffle_hash"), ["band", "bucket"])
         .select("id_a", F.explode("ids").alias("id_b"))
+        .observe(n_cands, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
     sh_spec = _bucket_spec(spark, index["shingles"])
@@ -2519,6 +2586,7 @@ def incremental_dedup_indexed(
         broadcast_pairs_budget,
         DEFAULT_SHINGLE_BROADCAST_BUDGET,
         a_side=spark.table(index["shingles"]).select("id", "sh"),
+        kernel_pairs=int(n_cands.get["n"]),
     ).filter(F.col("jaccard") >= threshold)
     # exact and near matches merge with the delta's ids in ONE grouping
     # (no per-pass groupBy, no left joins): each new doc gets the lowest
