@@ -8,7 +8,8 @@ recompiles its classes on every call. The gates that measure sizes on the
 jobs that materialize a relation (``Dataset.observe``) must report the same
 numbers as the separate measurements they replace, and the verify store's
 broadcast must be released. The verify kernel runs in as few Python tasks as
-its measured pair bound needs: each task pays a fixed worker start-up cost.
+its stage's measured inputs (pairs and a-side rows) need: each task pays a
+fixed worker start-up cost.
 """
 
 import random
@@ -213,16 +214,89 @@ def test_verify_kernel_keeps_partitions_at_or_over_the_bound(spark):
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
     expected = {(i, i + 1, 1 / 3) for i in range(63)}
-    for bound, parts in (
-        (8 * per_task, 4), (4 * per_task, 4), (2 * per_task, 2),
-        (per_task - 1, 1), (0, 1),
+    for n_pairs, a_rows, parts in (
+        (8 * per_task, 64, 4), (4 * per_task, 64, 4), (2 * per_task, 64, 2),
+        (per_task - 1, 64, 1), (0, 64, 1),
+        # the stage scans the whole a-side: a large one with few pairs
+        # keeps its partitions
+        (63, 8 * per_task, 4), (63, 2 * per_task + 1, 3),
+        # with the a-side unmeasured the width is left as it is
+        (63, None, 4),
     ):
         scored = _verify_pairs(
             store, pairs, 1,
             dedup.DEFAULT_PAIR_BROADCAST_BUDGET,
             dedup.DEFAULT_SHINGLE_BROADCAST_BUDGET,
-            n_pairs=bound,
+            n_pairs=n_pairs, a_rows=a_rows,
         )
-        assert _kernel_partitions(scored) == parts, bound
+        assert _kernel_partitions(scored) == parts, (n_pairs, a_rows)
         assert set(map(tuple, scored.collect())) == expected
         release_dedup_caches()
+
+
+def _spy_kernel(monkeypatch) -> list:
+    """Record each verify kernel frame and the bounds it was sized from."""
+    seen = []
+    real = dedup._verify_pairs_arrow
+
+    def spy(store, pairs, a_side, n_pairs, budget, a_rows):
+        out = real(store, pairs, a_side, n_pairs, budget, a_rows)
+        seen.append((out, n_pairs, a_rows))
+        return out
+
+    monkeypatch.setattr(dedup, "_verify_pairs_arrow", spy)
+    return seen
+
+
+def test_large_store_with_few_pairs_keeps_its_partitions(spark, corpus, monkeypatch):
+    base_df, delta_df, index = corpus
+    seen = _spy_kernel(monkeypatch)
+
+    def widths() -> list[int]:
+        seen.clear()
+        minhash_dedup_pairs(base_df, threshold=0.7)
+        incremental_dedup_indexed(delta_df, index, threshold=0.7)
+        out = [_kernel_partitions(df) for df, _, _ in seen]
+        release_dedup_caches()
+        return out
+
+    assert widths() == [1, 1]
+    (_, pairs, docs), (_, probe_pairs, base_docs) = seen
+    assert docs == base_docs == base_df.count()
+    # at a task width where the pair bounds alone would narrow each stage
+    # but the docs it scans fill every input partition (the store's, the
+    # index's 8 buckets), each stage keeps one task per input partition
+    parts = base_df.rdd.getNumPartitions()
+    per_task = -(-docs // max(parts, 8))
+    assert -(-pairs // per_task) < parts and -(-probe_pairs // per_task) < 8
+    monkeypatch.setattr(dedup, "VERIFY_PAIRS_PER_TASK", per_task)
+    assert widths() == [parts, 8]
+
+
+def test_probe_of_an_index_without_a_doc_count_keeps_its_buckets(
+    spark, corpus, monkeypatch
+):
+    import json
+
+    _, delta_df, index = corpus
+    prop = f"SHOW TBLPROPERTIES {index['lsh']} ('truthound.dedup.meta')"
+    meta = spark.sql(prop).collect()[0]["value"]
+    older = {k: v for k, v in json.loads(meta).items() if k != "docs"}
+
+    def set_meta(value):
+        spark.sql(
+            f"ALTER TABLE {index['lsh']} SET TBLPROPERTIES "
+            f"('truthound.dedup.meta' = '{value}')"
+        )
+
+    seen = _spy_kernel(monkeypatch)
+    set_meta(json.dumps(older))
+    try:
+        got = incremental_dedup_indexed(delta_df, index, threshold=0.7)
+        ids = {r["id"] for r in got.filter("dup_of IS NOT NULL").collect()}
+        assert seen[0][2] is None
+        assert _kernel_partitions(seen[0][0]) == 8
+    finally:
+        set_meta(meta)
+        release_dedup_caches()
+    assert ids == {5000, 5001, 5002, 6000, 6001}

@@ -98,6 +98,31 @@ class TestBroadcastBudgetGate:
         assert base == tight == off
         assert len(base) == 94  # 30 identical pairs, 64 at 3/5
 
+    def test_set_similarity_gate_rounds_short_strings_to_words(self, spark):
+        # 20 sets of 4 distinct 1-byte strings. An array stores each one in
+        # an 8 B slot plus a whole 8 B word: 960 + 80 * 16 = 2,240 B, where
+        # their raw length would count 960 + 80 * 9 = 1,680 B. Under a
+        # 2,000 B budget the verify join must not broadcast them
+        toks = list("abcdefgh")
+        sets = spark.createDataFrame(
+            [(i, toks[i % 5 : i % 5 + 4]) for i in range(20)],
+            "doc_id long, toks array<string>",
+        )
+
+        def run(**budgets):
+            pairs = set_similarity_join(sets, "toks", "doc_id", 0.5, **budgets)
+            plan = pairs._jdf.queryExecution().executedPlan().toString()
+            joins = [ln for ln in plan.splitlines() if "Join" in ln and "id_b" in ln]
+            return _pairs_set(pairs), joins
+
+        tight, joins = run(shingle_broadcast_budget=2_000)
+        roomy, roomy_joins = run(shingle_broadcast_budget=2_240)
+        off, _ = run(broadcast_pairs_budget=0, shingle_broadcast_budget=0)
+        assert joins and all("ShuffledHashJoin" in ln for ln in joins), joins
+        assert any("BroadcastHashJoin" in ln for ln in roomy_joins), roomy_joins
+        assert tight == roomy == off
+        assert len(tight) == 94
+
     def test_shingle_broadcast_gate_results_and_plan(self, docs):
         # r15 verify-join gate (guide §8): under the measured shingle
         # budget the pair-key join is a BroadcastHashJoin against the

@@ -80,11 +80,19 @@ DEFAULT_SHINGLE_BROADCAST_BUDGET = 2 << 30
 #: re-read the central directory of ``pyspark.zip`` — while the kernel
 #: costs 7-62 µs per pair (groups of 16 down to 1 member, 58-200-element
 #: shingle arrays, one core of a 4-core x86 VM). At 2^16 pairs a task does
-#: at least 0.45 s of kernel work, about twice its fixed cost, so the
-#: kernel's input is coalesced to ``ceil(bound / VERIFY_PAIRS_PER_TASK)``
-#: partitions when a pair bound was measured. ``coalesce`` never raises
-#: the partition count: a stage of 4 partitions narrows only below ~262k
-#: pairs, and a corpus of millions of pairs keeps its parallelism.
+#: at least 0.45 s of kernel work, about twice its fixed cost.
+#:
+#: ``coalesce`` is narrow: it sets the task count of the WHOLE stage that
+#: feeds the kernel, and that stage also scans every a-side document
+#: (sorting its array and attaching its pair group), not only the pairs.
+#: So the stage is sized from both measured inputs:
+#: ``ceil(max(pairs, a-side rows) / VERIFY_PAIRS_PER_TASK)`` tasks, and it
+#: is left as it is when either was not measured. A stage of 4 partitions
+#: narrows only while both stay below ~262k; a large store or base with few
+#: pairs keeps its parallelism. An a-side row costs that stage less than a
+#: pair costs the kernel: a 2^17-doc store of 64-element arrays with 8
+#: pairs verified in 0.68-0.81 s in one task and 0.86-1.08 s in four
+#: (warm, ``local[4]``, the store's collect and broadcast included).
 VERIFY_PAIRS_PER_TASK = 1 << 16
 
 #: Cap on the number of input files whose (length, mtime) statuses a
@@ -941,7 +949,9 @@ def _pair_relation_bytes(rel: DataFrame, n_rows: int) -> int:
 def _payload_measures(arr_col: str, strings: bool = False) -> tuple[Column, ...]:
     """Row count and total element count of an (id, <array>) relation,
     plus, for string or binary elements (``strings``), their summed byte
-    length — the measurements behind :func:`_payload_bytes`."""
+    length — the measurements behind :func:`_payload_bytes`. An
+    ``UnsafeArrayData`` stores each variable-length element's bytes
+    rounded up to an 8-byte word, so each length is summed rounded."""
     measures = (
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.size(arr_col)), F.lit(0)).alias("e"),
@@ -950,7 +960,8 @@ def _payload_measures(arr_col: str, strings: bool = False) -> tuple[Column, ...]
         octets = F.aggregate(
             arr_col,
             F.lit(0).cast("long"),
-            lambda acc, x: acc + F.coalesce(F.octet_length(x), F.lit(0)),
+            lambda acc, x: acc
+            + F.coalesce((F.octet_length(x) + 7).bitwiseAND(-8), F.lit(0)),
         )
         measures += (F.coalesce(F.sum(octets), F.lit(0)).alias("o"),)
     return measures
@@ -958,8 +969,8 @@ def _payload_measures(arr_col: str, strings: bool = False) -> tuple[Column, ...]
 
 def _payload_bytes(measures: dict, elem_bytes: int) -> int:
     """Estimated in-memory size from :func:`_payload_measures` values:
-    48 B a row, ``elem_bytes`` an element, plus the elements' own bytes
-    where they were measured."""
+    48 B a row, ``elem_bytes`` an element, plus the elements' own
+    word-rounded bytes where they were measured."""
     return (
         int(measures["n"]) * 48
         + int(measures["e"]) * elem_bytes
@@ -1010,7 +1021,7 @@ def _verify_pairs_arrow(
     a_side: DataFrame | None,
     n_pairs: int | None,
     broadcast_pairs_budget: int,
-    kernel_pairs: int | None,
+    a_rows: int | None,
 ) -> DataFrame:
     """(id_a, id_b, __na, __nb, __inter) for every distinct candidate
     pair via the r15 grouped Arrow merge-intersect kernel (guide §4.2/§8
@@ -1030,19 +1041,22 @@ def _verify_pairs_arrow(
     relation — attaches once, so no array travels with a per-pair row.
     The grouped bare ids broadcast into that attach only while
     ``n_pairs``, a measured upper bound on the pairs (and so on the
-    groups), sizes them under ``broadcast_pairs_budget``; otherwise, or
-    when no bound was measured, the attach is a shuffle-hash join — in
-    place for pairs already hash-partitioned on ``id_a`` like a bucketed
-    ``a_side`` (the indexed probe).
+    groups), sizes them under ``broadcast_pairs_budget``; otherwise, when
+    no bound was measured, or for an ``a_side`` (the indexed probe's
+    bucketed base, whose pairs are laid out in its buckets), the attach is
+    a shuffle-hash join — in place for pairs already hash-partitioned on
+    ``id_a``.
 
-    The kernel's Python stage is sized from ``kernel_pairs``, a measured
-    upper bound on the pairs: its input is coalesced to
-    ``max(1, ceil(kernel_pairs / VERIFY_PAIRS_PER_TASK))`` partitions, so a
-    small verify runs in one Python task instead of one per input
-    partition (each task costs ~0.24 s of worker CPU before its first row,
-    the kernel 7-62 µs per pair; see ``VERIFY_PAIRS_PER_TASK``).
-    Coalescing only merges partitions, so no row changes group; with no
-    bound the partitioning is left as it is.
+    The stage that attaches the a-side arrays and runs the kernel is sized
+    from its two measured inputs, ``n_pairs`` and ``a_rows`` (the row count
+    of the a-side relation, which that stage scans whole): it is coalesced
+    to ``max(1, ceil(max(n_pairs, a_rows) / VERIFY_PAIRS_PER_TASK))``
+    partitions, so a verify whose whole stage is small runs in one Python
+    task instead of one per input partition (each task costs ~0.24 s of
+    worker CPU before its first row, the kernel 7-62 µs per pair; see
+    ``VERIFY_PAIRS_PER_TASK``). Coalescing only merges partitions, so no
+    row changes group; when either input was not measured the
+    partitioning is left as it is.
 
     Bit-exactness: intersection COUNTS are integers — sorted-merge
     equality counting over the same distinct-element arrays returns
@@ -1070,7 +1084,7 @@ def _verify_pairs_arrow(
     a_arrays = (store if a_side is None else a_side).select(
         F.col("id").alias("id_a"), F.sort_array("sh").alias("sh_a")
     )
-    if n_pairs is None:
+    if n_pairs is None or a_side is not None:
         rows = a_arrays.join(groups.hint("shuffle_hash"), "id_a")
     else:
         rows = _attach_pairs(
@@ -1078,8 +1092,9 @@ def _verify_pairs_arrow(
             elems=n_pairs,
         )
     rows = rows.select("id_a", "sh_a", "ids")
-    if kernel_pairs is not None:
-        rows = rows.coalesce(max(1, -(-kernel_pairs // VERIFY_PAIRS_PER_TASK)))
+    if n_pairs is not None and a_rows is not None:
+        stage_rows = max(n_pairs, a_rows)
+        rows = rows.coalesce(max(1, -(-stage_rows // VERIFY_PAIRS_PER_TASK)))
 
     def kernel(batches):
         import numpy as np
@@ -1169,23 +1184,22 @@ def _verify_pairs(
     shingle_broadcast_budget: int,
     a_side: DataFrame | None = None,
     n_pairs: int | None = None,
-    kernel_pairs: int | None = None,
+    a_rows: int | None = None,
 ) -> DataFrame:
     """(id_a, id_b, jaccard) — exact shingle-set Jaccard of every distinct
     candidate pair in ``pairs`` (id_a, id_b; repeats allowed; ``n_pairs``
-    a measured upper bound on their number, or None). ``kernel_pairs``,
-    when given, is a measured bound that sizes only the kernel's Python
-    stage and leaves the attach joins as they are; it defaults to
-    ``n_pairs``. ``store``
+    a measured upper bound on their number, or None). ``store``
     (id, sh) holds the b-side arrays, and the a-side ones unless
-    ``a_side`` (id, sh) is given. The one verify primitive of the minhash
+    ``a_side`` (id, sh) is given; ``a_rows`` is the measured row count of
+    the a-side relation, or None. The one verify primitive of the minhash
     family, with one gate: ``store_bytes`` — the store's MEASURED size
     (:func:`_payload_bytes`) — against ``shingle_broadcast_budget``.
 
     Under the budget the grouped Arrow kernel runs
     (:func:`_verify_pairs_arrow`; ``n_pairs`` sizes its attach under
-    ``broadcast_pairs_budget``, and the pair bound narrows its Python
-    stage to one task per ``VERIFY_PAIRS_PER_TASK`` pairs). Over it (or at
+    ``broadcast_pairs_budget``, and ``n_pairs`` and ``a_rows`` together
+    narrow its stage to one task per ``VERIFY_PAIRS_PER_TASK`` pairs or
+    a-side rows). Over it (or at
     budget 0) the ceiling-free shuffle shape runs: the distinct pairs are
     materialized and counted (:func:`_materialize_pairs`), each side's
     arrays attach through :func:`_attach_pairs` under
@@ -1197,8 +1211,7 @@ def _verify_pairs(
     integer counts."""
     if 0 < shingle_broadcast_budget and store_bytes <= shingle_broadcast_budget:
         scored = _verify_pairs_arrow(
-            store, pairs, a_side, n_pairs, broadcast_pairs_budget,
-            n_pairs if kernel_pairs is None else kernel_pairs,
+            store, pairs, a_side, n_pairs, broadcast_pairs_budget, a_rows
         )
     else:
         cands, n_pairs = _materialize_pairs(pairs.dropDuplicates())
@@ -1340,7 +1353,7 @@ def minhash_dedup_pairs(
     if shingle_table is not None:
         _check_shingle_meta(df.sparkSession, shingle_table, shingle_n)
         sh = df.sparkSession.table(shingle_table).select("id", "sh")
-        sh_bytes = None
+        sh_size = None
     else:
         # shingle+hash each document exactly once: the checkpointed
         # (id, array<long>) table feeds BOTH the signature/banding
@@ -1349,23 +1362,24 @@ def minhash_dedup_pairs(
         # passes, and long arrays checkpoint/intersect ~25 % cheaper than
         # string arrays — see _hashed_shingle_arrays for the collision
         # analysis). The checkpoint job also measures the verify gate's
-        # payload size, by observation.
-        sh_size = Observation()
+        # payload size and the store's row count, by observation.
+        obs = Observation()
         sh = (
             _hashed_shingle_arrays(df, text_col, id_col, shingle_n)
-            .observe(sh_size, *_payload_measures("sh"))
+            .observe(obs, *_payload_measures("sh"))
             .localCheckpoint(eager=True)
         )
-        sh_bytes = _payload_bytes(sh_size.get, 8)
+        sh_size = obs.get
     pairs, n_pairs = _lsh_pair_rows(
         df, text_col, id_col, num_hashes, bands, shingle_n, max_bucket_size,
         _hashed_shingles=sh,
     )
-    if sh_bytes is None and shingle_broadcast_budget > 0:
-        sh_bytes = _payload_relation_bytes(sh, "sh", 8)
+    if sh_size is None and shingle_broadcast_budget > 0:
+        sh_size = sh.agg(*_payload_measures("sh")).collect()[0].asDict()
     return _verify_pairs(
-        sh, pairs, sh_bytes, broadcast_pairs_budget, shingle_broadcast_budget,
-        n_pairs=n_pairs,
+        sh, pairs, _payload_bytes(sh_size, 8) if sh_size else 0,
+        broadcast_pairs_budget, shingle_broadcast_budget,
+        n_pairs=n_pairs, a_rows=int(sh_size["n"]) if sh_size else None,
     ).filter(F.col("jaccard") >= threshold)
 
 
@@ -2366,7 +2380,9 @@ def write_dedup_index(
     shares is missed; ``None`` = exact. Banding/shingle config and the
     cap ride in table properties and are enforced at query time — an
     index probed under different parameters would silently miss
-    everything. Returns {"fingerprints", "shingles", "lsh"} table names.
+    everything. The stored doc count, counted on the shingle table's
+    write job, rides with them: the probe sizes its verify stage from it.
+    Returns {"fingerprints", "shingles", "lsh"} table names.
     """
     import json as _json
 
@@ -2382,7 +2398,12 @@ def write_dedup_index(
         fp, f"{prefix}_fingerprints", "fp", buckets=buckets,
         database=database, location=location,
     )
-    sh = _hashed_shingle_arrays(docs, "__t", "id", shingle_n)
+    # the write job also counts the stored shingle rows: the probe's
+    # verify stage scans that table whole, and sizes itself from the count
+    n_docs = Observation()
+    sh = _hashed_shingle_arrays(docs, "__t", "id", shingle_n).observe(
+        n_docs, F.count(F.lit(1)).alias("n")
+    )
     t_sh = write_bucketed(
         sh, f"{prefix}_shingles", "id", buckets=buckets,
         database=database, location=location,
@@ -2408,6 +2429,7 @@ def write_dedup_index(
             "bands": bands,
             "shingle_n": shingle_n,
             "max_bucket_size": max_bucket_size,
+            "docs": int(n_docs.get["n"]),
         }
     )
     # meta rides through write_bucketed into TBLPROPERTIES AND the
@@ -2450,10 +2472,13 @@ def incremental_dedup_indexed(
     store; the delta's payload size, observed on its checkpoint job, is
     the store's gate against ``DEFAULT_SHINGLE_BROADCAST_BUDGET``. The
     candidate rows, counted on the job that checkpoints them, bound the
-    pairs and size the kernel's Python stage: one task per
-    ``VERIFY_PAIRS_PER_TASK`` (2^16, where a task's kernel work at 7 µs a
-    pair is twice its ~0.24 s fixed start-up cost), so a delta-sized probe
-    runs one Python task instead of one per bucket. Exact
+    pairs. The verify stage scans the whole bucketed shingle table, so it
+    is sized from that bound and the base's doc count the index recorded:
+    one task per ``VERIFY_PAIRS_PER_TASK`` of the larger (2^16, where a
+    task's kernel work at 7 µs a pair is twice its ~0.24 s fixed start-up
+    cost). A probe of a small base runs one Python task instead of one per
+    bucket; a large base, or an index that recorded no count, keeps one
+    task per bucket. Exact
     and near matches merge with the delta's ids in one grouping. Returns
     (id, dup_of, match_kind) exactly like ``incremental_dedup``; recall
     differences exist only where a bucket cap engaged.
@@ -2567,8 +2592,8 @@ def incremental_dedup_indexed(
     # the id-bucketed shingle table once (see _verify_pairs); the pairs
     # are laid out in that table's bucket layout, so the table is not
     # shuffled. The same job counts the candidate rows, an upper bound on
-    # the pairs that sizes the kernel's Python stage; it is not passed as
-    # ``n_pairs``, which would switch the in-place attach to a broadcast
+    # the pairs that, with the base's recorded doc count, sizes the verify
+    # stage
     n_cands = Observation()
     pairs = (
         idx.join(e_new.hint("shuffle_hash"), ["band", "bucket"])
@@ -2586,7 +2611,8 @@ def incremental_dedup_indexed(
         broadcast_pairs_budget,
         DEFAULT_SHINGLE_BROADCAST_BUDGET,
         a_side=spark.table(index["shingles"]).select("id", "sh"),
-        kernel_pairs=int(n_cands.get["n"]),
+        n_pairs=int(n_cands.get["n"]),
+        a_rows=meta.get("docs"),
     ).filter(F.col("jaccard") >= threshold)
     # exact and near matches merge with the delta's ids in ONE grouping
     # (no per-pass groupBy, no left joins): each new doc gets the lowest
