@@ -24,10 +24,10 @@ from truthound_spark.pipeline.dedup import (
     _hashed_shingle_arrays,
     _payload_bytes,
     _payload_measures,
-    _payload_relation_bytes,
     _verify_pairs,
     connected_components,
     dedup_clusters,
+    incremental_dedup,
     incremental_dedup_indexed,
     minhash_dedup_pairs,
     release_dedup_caches,
@@ -36,6 +36,7 @@ from truthound_spark.pipeline.dedup import (
 
 DEDUP_CLUSTERS_JOBS = 13
 PROBE_JOBS = 10
+INCREMENTAL_JOBS = 24
 # Classes a warm round may recompile. Which classes fall out depends on how
 # their keys hash into the cache's segments, and that changes with every
 # JVM: a round recompiled 132 before the dedup calls cut their plans, and
@@ -85,9 +86,21 @@ def _compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+def _jobs_of(spark, gid: str, call) -> tuple[list, int]:
+    """The rows of ``call()`` and the Spark jobs it ran, counted in a job
+    group; the dedup caches are released after it."""
+    sc = spark.sparkContext
+    sc.setJobGroup(gid, gid)
+    try:
+        rows = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    release_dedup_caches()
+    return rows, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
 def _round(spark, corpus, group: str) -> dict:
     base_df, delta_df, index = corpus
-    sc = spark.sparkContext
     out = {}
     calls = {
         "dedup_clusters": lambda: dedup_clusters(base_df, threshold=0.7)
@@ -100,15 +113,8 @@ def _round(spark, corpus, group: str) -> dict:
         .collect(),
     }
     for name, call in calls.items():
-        gid = f"{group}-{name}"
-        sc.setJobGroup(gid, gid)
-        try:
-            rows = call()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        release_dedup_caches()
+        rows, out[f"{name}_jobs"] = _jobs_of(spark, f"{group}-{name}", call)
         out[name] = {r[0] for r in rows}
-        out[f"{name}_jobs"] = len(sc.statusTracker().getJobIdsForGroup(gid))
     return out
 
 
@@ -124,6 +130,26 @@ def test_warm_round_stays_in_codegen_cache(spark, corpus):
     assert second["dedup_clusters_jobs"] <= DEDUP_CLUSTERS_JOBS, second
     assert second["probe_jobs"] <= PROBE_JOBS, second
     assert warm <= WARM_COMPILES, f"{warm} classes recompiled by a warm round"
+
+
+def test_incremental_dedup_jobs_per_call(spark, corpus):
+    # the union-based increment verifies through the shared kernel: its
+    # store's size is observed on the union's checkpoint and its pairs are
+    # bounded by the candidate count, so no job re-counts either
+    base_df, delta_df, _ = corpus
+
+    def call():
+        return (
+            incremental_dedup(delta_df, base_df, threshold=0.7)
+            .filter("dup_of IS NOT NULL")
+            .select("id")
+            .collect()
+        )
+
+    for attempt in ("cold", "warm"):
+        rows, jobs = _jobs_of(spark, f"incremental-{attempt}", call)
+        assert {r[0] for r in rows} == {5000, 5001, 5002, 6000, 6001}
+        assert jobs <= INCREMENTAL_JOBS, (attempt, jobs)
 
 
 def test_release_destroys_verify_broadcast_and_next_call_is_exact(spark, corpus):
@@ -158,7 +184,8 @@ def test_observed_payload_size_equals_measured(spark, corpus):
         .localCheckpoint(eager=True)
     )
     observed = _payload_bytes(size.get, 8)
-    assert observed == _payload_relation_bytes(sh, "sh", 8)
+    measured = sh.agg(*_payload_measures("sh")).collect()[0].asDict()
+    assert observed == _payload_bytes(measured, 8)
     assert observed > 48 * base_df.count()
 
 

@@ -161,12 +161,12 @@ class TestBroadcastBudgetGate:
             assert _pairs_set(minhash_dedup_pairs(corpus, threshold=0.5)) == exact
 
     def test_payload_bytes_measured_not_estimated(self, spark):
-        from truthound_spark.pipeline.dedup import _payload_relation_bytes
+        from truthound_spark.pipeline.dedup import _payload_bytes, _payload_measures
 
         rel = spark.range(100).select(
             F.col("id"), F.array(F.col("id"), F.col("id") + 1).alias("sh")
         )
-        got = _payload_relation_bytes(rel, "sh", 8)
+        got = _payload_bytes(rel.agg(*_payload_measures("sh")).collect()[0].asDict(), 8)
         # 100 rows × (48 overhead + 2 longs × 8)
         assert got == 100 * (48 + 16)
 
@@ -293,6 +293,37 @@ class TestShingleTableLayout:
             (r["id"], r["dup_of"], r["match_kind"]) for r in df.collect()
         }
         assert as_set(stored) == as_set(base)
+
+    def test_incremental_dedup_runs_the_verify_kernel(
+        self, docs, shingle_table
+    ):
+        # under the default budget the union store goes to the grouped
+        # Arrow verify, inline and with a stored base, and both give the
+        # results of the ceiling-free shuffle shape (budgets 0)
+        picked = docs.filter(F.col("doc_id") % 5 == 0)
+        new_docs = picked.select(
+            (F.col("doc_id") + 1_000_000).alias("doc_id"),
+            F.when(F.col("doc_id") % 10 == 0, F.col("text"))
+            .otherwise(F.concat("text", F.lit(" edited")))
+            .alias("text"),
+        )
+        as_set = lambda df: {  # noqa: E731
+            (r["id"], r["dup_of"], r["match_kind"]) for r in df.collect()
+        }
+        off = as_set(
+            incremental_dedup(
+                new_docs, docs, threshold=0.5, base_shingle_table=None,
+                broadcast_pairs_budget=0, shingle_broadcast_budget=0,
+            )
+        )
+        assert {"exact", "near"} <= {kind for _, _, kind in off}
+        for table in (None, shingle_table):
+            res = incremental_dedup(
+                new_docs, docs, threshold=0.5, base_shingle_table=table
+            )
+            plan = res._jdf.queryExecution().executedPlan().toString()
+            assert "MapInArrow kernel(" in plan, plan
+            assert as_set(res) == off
 
     def test_incremental_gated_has_no_broadcast(self, docs):
         new_docs = docs.limit(50).withColumn("doc_id", F.col("doc_id") + 1_000_000)

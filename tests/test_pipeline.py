@@ -371,75 +371,15 @@ def test_repartition_by_size_buckets_by_bytes(spark):
     # a tiny corpus never goes below one partition
     tiny = repartition_by_size(df.limit(1), target_partition_bytes=1 << 30)
     assert tiny.rdd.getNumPartitions() == 1
+    # NULL payloads (missing assets) weigh nothing: 1,000 of 10 KB among
+    # 2,000 rows is 10 MB -> 20 partitions at a 500 KB target
+    half_null = spark.createDataFrame(
+        [(i, (b"x" * 10_000) if i % 2 == 0 else None) for i in range(2000)],
+        "asset_id long, payload binary",
+    )
+    out = repartition_by_size(half_null, target_partition_bytes=500_000)
+    assert out.rdd.getNumPartitions() == 20
     with pytest.raises(ValueError, match="target_partition_bytes"):
         repartition_by_size(df, target_partition_bytes=0)
 
 
-def test_repartition_by_size_sample_estimate_tracks_exact(spark):
-    """VERDICT r9 #5: estimate='sample' lands within ±20% of the exact
-    partition count on a SKEWED corpus (most assets small, a heavy tail
-    of large ones), at a fraction high enough for the scale math
-    (the estimator's relative stderr is cv/sqrt(k); 30% of 2000 rows
-    with this corpus's cv ≈ 2.1 gives ~8.6% — at 100 TB row counts the
-    same formula is sub-1% at 1% sampling)."""
-    from truthound_spark.pipeline.multimodal import repartition_by_size
-
-    rows = [
-        (i, b"x" * (200_000 if i % 50 == 0 else 500)) for i in range(2000)
-    ]
-    df = spark.createDataFrame(rows, "asset_id long, payload binary")
-    target = 100_000
-    exact_n = repartition_by_size(
-        df, target_partition_bytes=target
-    ).rdd.getNumPartitions()
-    sample_n = repartition_by_size(
-        df,
-        target_partition_bytes=target,
-        estimate="sample",
-        sample_fraction=0.3,
-        seed=7,
-    ).rdd.getNumPartitions()
-    assert exact_n > 1
-    assert abs(sample_n - exact_n) <= max(1, round(0.2 * exact_n))
-    # deterministic under the same seed
-    again = repartition_by_size(
-        df,
-        target_partition_bytes=target,
-        estimate="sample",
-        sample_fraction=0.3,
-        seed=7,
-    ).rdd.getNumPartitions()
-    assert again == sample_n
-    with pytest.raises(ValueError, match="sample_fraction"):
-        repartition_by_size(df, estimate="sample", sample_fraction=0.0)
-    with pytest.raises(ValueError, match="estimate"):
-        repartition_by_size(df, estimate="bogus")
-
-
-def test_repartition_by_size_sample_mode_null_payloads_unbiased(spark):
-    """Review fix: NULL payloads (missing assets) must not inflate the
-    sample estimate — the sample indicator is computed separately from
-    the byte measurement, so a sampled NULL row counts toward the
-    sampled-row share while contributing 0 bytes (matching exact mode's
-    sum(length) semantics)."""
-    from truthound_spark.pipeline.multimodal import repartition_by_size
-    from pyspark.sql import functions as F
-
-    rows = [
-        (i, (b"x" * 10_000) if i % 2 == 0 else None) for i in range(2000)
-    ]
-    df = spark.createDataFrame(rows, "asset_id long, payload binary")
-    target = 500_000  # exact total = 10 MB -> 20 partitions
-    exact_n = repartition_by_size(
-        df, target_partition_bytes=target
-    ).rdd.getNumPartitions()
-    sample_n = repartition_by_size(
-        df,
-        target_partition_bytes=target,
-        estimate="sample",
-        sample_fraction=0.4,
-        seed=11,
-    ).rdd.getNumPartitions()
-    assert exact_n == 20
-    # the pre-fix estimator would have read ~2x exact (~40) here
-    assert abs(sample_n - exact_n) <= max(1, round(0.2 * exact_n))

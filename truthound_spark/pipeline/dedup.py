@@ -970,24 +970,15 @@ def _payload_measures(arr_col: str, strings: bool = False) -> tuple[Column, ...]
 def _payload_bytes(measures: dict, elem_bytes: int) -> int:
     """Estimated in-memory size from :func:`_payload_measures` values:
     48 B a row, ``elem_bytes`` an element, plus the elements' own
-    word-rounded bytes where they were measured."""
+    word-rounded bytes where they were measured. The values are real
+    measurements, not a Catalyst estimate, because the verify-stage
+    broadcast gate must never flip on a bad stats guess: observed on the
+    job that materializes a relation (``Dataset.observe``), or one
+    aggregate over a stored table."""
     return (
         int(measures["n"]) * 48
         + int(measures["e"]) * elem_bytes
         + int(measures.get("o", 0))
-    )
-
-
-def _payload_relation_bytes(rel: DataFrame, arr_col: str, elem_bytes: int) -> int:
-    """Estimated in-memory size of an (id, <array>) payload relation:
-    one narrow aggregate (count + total element count) over the
-    already-materialized (bucketed) relation — a cheap real measurement,
-    not a Catalyst estimate, because the verify-stage broadcast gate must
-    never flip on a bad stats guess. A relation the dedup pipelines
-    materialize themselves is measured by observing the same two
-    aggregates on the job that materializes it (``Dataset.observe``)."""
-    return _payload_bytes(
-        rel.agg(*_payload_measures(arr_col)).collect()[0].asDict(), elem_bytes
     )
 
 
@@ -2197,9 +2188,10 @@ def incremental_dedup(
       fingerprint.
     * **near** — both sides shingle once into a side-tagged union, ONE
       banded-LSH pass over the union yields candidates, kept only when
-      the two ids straddle sides, then verified with exact shingle-set
-      Jaccard ≥ threshold (same broadcast-bare-candidates join shape as
-      ``minhash_dedup_pairs``). New-vs-new duplicates are deliberately
+      the two ids straddle sides, oriented (new id, base id), then
+      verified with exact shingle-set Jaccard ≥ threshold by
+      :func:`_verify_pairs`, the verify of ``minhash_dedup_pairs``, with
+      the union as its store. New-vs-new duplicates are deliberately
       NOT reported — run ``dedup_clusters`` on the delta for those.
 
     Ids must be globally unique across both snapshots (they share an id
@@ -2214,8 +2206,10 @@ def incremental_dedup(
     SCALING.md r12) against the stored three-table index. Keep THIS
     function for one-shot comparisons and as the oracle-twin reference.
     Candidate attaches are broadcast only under
-    ``broadcast_pairs_budget`` (measured), else shuffle-hash on id —
-    see ``minhash_dedup_pairs``.
+    ``broadcast_pairs_budget`` (measured), else shuffle-hash on id, and
+    the union's payload size, observed on its checkpoint job inline (one
+    aggregate over a stored ``base_shingle_table``), gates the verify
+    against ``shingle_broadcast_budget`` — see ``minhash_dedup_pairs``.
 
     Returns one row per new document: (id, dup_of, match_kind) with
     match_kind ∈ ('exact', 'near', NULL); exact wins over near, and
@@ -2259,23 +2253,30 @@ def incremental_dedup(
             .withColumn("side", F.lit(1))
             .unionByName(sh_base.withColumn("side", F.lit(0)))
         )
+        sh_size = None
     else:
         sh_base = _hashed_shingle_arrays(base_docs, "__t", "id", shingle_n)
         # side tag rides INSIDE the checkpointed union: a separate `sides`
         # relation built from sh_new/sh_base would re-run both shingle
-        # pipelines (and their scans) — r8 lazy-reuse audit
+        # pipelines (and their scans) — r8 lazy-reuse audit. The
+        # checkpoint job also measures the verify store (the union), by
+        # observation
+        obs = Observation()
         sh = (
             sh_new.withColumn("side", F.lit(1))
             .unionByName(sh_base.withColumn("side", F.lit(0)))
+            .observe(obs, *_payload_measures("sh"))
             .localCheckpoint(eager=True)
         )
+        sh_size = obs.get
     sides = sh.select("id", "side")
     cands = minhash_lsh_candidates(
         sh, "__t", "id", num_hashes, bands, shingle_n,
         max_bucket_size=max_bucket_size, _hashed_shingles=sh,
     )
-    # orient candidates as (new_id, base_id); candidates are bare id
-    # pairs — broadcast into the side lookup only under the budget
+    # orient candidates as (new id, base id); candidates are bare id
+    # pairs — broadcast into the side lookup only under the budget. Their
+    # count bounds the cross-side pairs the verify sees
     cands, n_cands = _materialize_pairs(cands)
     sa = sides.select(F.col("id").alias("id_a"), F.col("side").alias("side_a"))
     sb = sides.select(F.col("id").alias("id_b"), F.col("side").alias("side_b"))
@@ -2284,42 +2285,21 @@ def incremental_dedup(
         .join(sb, "id_b")
         .filter(F.col("side_a") != F.col("side_b"))
         .select(
-            F.when(F.col("side_a") == 1, F.col("id_a")).otherwise(F.col("id_b")).alias("id"),
-            F.when(F.col("side_a") == 1, F.col("id_b")).otherwise(F.col("id_a")).alias("base_id"),
+            F.when(F.col("side_a") == 1, F.col("id_a")).otherwise(F.col("id_b")).alias("id_a"),
+            F.when(F.col("side_a") == 1, F.col("id_b")).otherwise(F.col("id_a")).alias("id_b"),
         )
     )
-    a = sh.select(F.col("id"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("id").alias("base_id"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    jac = inter / (
-        F.size("sh_a") + F.size("sh_b") - F.size(F.array_intersect("sh_a", "sh_b"))
-    )
-    cross, n_cross = _materialize_pairs(cross)
-    with_a = _attach_pairs(a, cross, "id", n_cross, broadcast_pairs_budget)
-    # same r15 verify-join gate as minhash_dedup_pairs (guide §8): under
-    # the measured budget the per-document b-side broadcasts and the
-    # per-PAIR enriched relation never crosses an exchange
-    if (
-        shingle_broadcast_budget > 0
-        and _payload_relation_bytes(sh, "sh", 8) <= shingle_broadcast_budget
-    ):
-        verified = with_a.join(F.broadcast(b), "base_id")
-    else:
-        verified = with_a.join(
-            _attach_pairs(
-                b,
-                cross.select("base_id").dropDuplicates(),
-                "base_id",
-                n_cross,
-                broadcast_pairs_budget,
-            ).hint("shuffle_hash"),
-            "base_id",
-        )
+    if sh_size is None and shingle_broadcast_budget > 0:
+        sh_size = sh.agg(*_payload_measures("sh")).collect()[0].asDict()
     near = (
-        verified
-        .filter(jac >= threshold)
-        .groupBy("id")
-        .agg(F.min("base_id").alias("near_of"))
+        _verify_pairs(
+            sh, cross, _payload_bytes(sh_size, 8) if sh_size else 0,
+            broadcast_pairs_budget, shingle_broadcast_budget,
+            n_pairs=n_cands, a_rows=int(sh_size["n"]) if sh_size else None,
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .groupBy(F.col("id_a").alias("id"))
+        .agg(F.min("id_b").alias("near_of"))
     )
     return (
         new_docs.select("id")

@@ -526,9 +526,6 @@ def repartition_by_size(
     target_partition_bytes: int = 128 * 1024 * 1024,
     payload_col: str = "payload",
     id_col: str = "asset_id",
-    estimate: str = "exact",
-    sample_fraction: float = 0.01,
-    seed: int = 42,
 ) -> DataFrame:
     """The repartition-by-size-bucket step the module docstring
     prescribes: size media partitions by PAYLOAD BYTES, not row count —
@@ -536,28 +533,10 @@ def repartition_by_size(
     very different partition counts, and the parquet reader's
     maxPartitionBytes only governs the SCAN, not post-transform stages.
 
-    ``estimate`` picks how total payload bytes are measured
-    (VERDICT r9 #5 — at 100 TB of media the exact measurement is a full
-    corpus read just to choose a partition count):
-
-    * ``"exact"`` (default, right at test scale): one fused aggregate
-      sums ``length(payload)`` over every row. Scan count: 1 extra
-      full pass.
-    * ``"sample"`` (the 100 TB path): ``SUM(length)`` over a seeded
-      Bernoulli ``sample(sample_fraction)`` scaled by the TRUE sampled
-      row share (sampled_rows/total_rows from the same aggregate pass,
-      not the nominal fraction — removes the sampling-rate half of the
-      variance). Scan count: still 1 extra pass, but only ~fraction of
-      rows reach the length() evaluation and the aggregate; on a parquet
-      scan the payload column's pages are still read (column I/O is a
-      property of the scan, not the expression), so the win there is
-      decode/aggregate CPU — and full bytes when the upstream frame is
-      cached, a non-columnar source, or a reader that can push the
-      sample down. Estimator
-      variance: relative stderr ≈ cv/sqrt(k) for k sampled rows with
-      payload-size coefficient of variation cv — at 1% of 1e8 assets
-      that is ~cv/1000, i.e. well under ±1% for any realistic size
-      distribution; the partition count lands within ±a few % of exact.
+    Total payload bytes are one aggregate, ``sum(length(payload))`` over
+    every row (NULL payloads weigh nothing): one extra pass over the
+    payload column, which any estimate read from a parquet scan pays
+    too, since the column's pages are read whichever rows it keeps.
 
     Rows then hash-spread across ceil(total / target) partitions keyed
     by xxhash64(id) — deterministic placement, expected bytes/partition
@@ -570,41 +549,8 @@ def repartition_by_size(
         )
     import math
 
-    if estimate == "exact":
-        total = df.agg(
-            F.sum(F.length(F.col(payload_col))).alias("b")
-        ).collect()[0]["b"] or 0
-    elif estimate == "sample":
-        if not 0 < sample_fraction <= 1:
-            raise ValueError(
-                f"sample_fraction must be in (0, 1], got {sample_fraction}"
-            )
-        # The sample INDICATOR is computed separately from the byte
-        # measurement so NULL payloads stay in the sampled-row count:
-        # scaling by sampled_rows/total_rows where sampled_rows counted
-        # only non-null payloads would overestimate the total by
-        # 1/(non-null fraction) on corpora with missing assets (a
-        # sampled NULL payload contributes 0 bytes — exactly what exact
-        # mode's sum(length) does — but still one sampled row).
-        row = (
-            df.select(
-                (F.rand(seed) < F.lit(sample_fraction)).alias("samp"),
-                F.length(F.col(payload_col)).cast("long").alias("len"),
-            )
-            .agg(
-                F.sum(F.when(F.col("samp"), F.col("len"))).alias("sampled_bytes"),
-                F.sum(F.when(F.col("samp"), F.lit(1)).otherwise(F.lit(0))).alias(
-                    "sampled_rows"
-                ),
-                F.count(F.lit(1)).alias("total_rows"),
-            )
-            .collect()[0]
-        )
-        sampled = row["sampled_bytes"] or 0
-        k = row["sampled_rows"] or 0
-        n_rows = row["total_rows"] or 0
-        total = sampled * n_rows / k if k > 0 else 0
-    else:
-        raise ValueError(f"estimate must be 'exact' or 'sample', got {estimate!r}")
+    total = df.agg(
+        F.sum(F.length(F.col(payload_col))).alias("b")
+    ).collect()[0]["b"] or 0
     n = max(1, math.ceil(total / target_partition_bytes))
     return df.repartition(n, F.xxhash64(F.col(id_col)))

@@ -819,10 +819,8 @@ def _quantize_half_away(x: float, scale: float) -> float:
 
 def _pq_luts(qv: list[float], codebooks, sub_d: int) -> list[list[float]]:
     """Per-subspace ADC lookup tables for one (already grid-quantized)
-    query, each indexed BY CELL ID with +inf for missing cells — THE
-    single LUT builder shared by the literal-expression path
-    (:func:`_pq_adc_dist`) and the Arrow kernel
-    (:func:`_pq_scored_arrow`), so their entries can never drift."""
+    query, each indexed BY CELL ID with +inf for missing cells (see
+    :func:`_pq_adc_dist`)."""
     luts: list[list[float]] = []
     for s in range(len(codebooks)):
         qs = qv[s * sub_d : (s + 1) * sub_d]
@@ -848,121 +846,6 @@ def _pq_adc_dist(qv: list[float], codebooks, sub_d: int):
         term = F.element_at(lut_lit, F.element_at("codes", s + 1) + 1)
         dist = term if dist is None else dist + term
     return F.round(dist * 1e6) / F.lit(1e6)
-
-
-#: Default for pq_search's Arrow ADC kernel (VERDICT r14 #3). Flipped by
-#: the r15 probe ONLY if the kernel is measured ≥1.3× on the isolated
-#: A/B with the output proven bit-identical (exceptAll both ways = 0 at
-#: sf0.1 AND the 100× corpus, plus the PQ oracle slots).
-PQ_ARROW_KERNEL_DEFAULT = False
-
-
-def _pq_scored_arrow(
-    df: DataFrame,
-    codebooks,
-    queries: list[tuple[int, list[float]]],
-    vec_col: str,
-    id_col: str,
-    scale: float,
-) -> DataFrame:
-    """(query_id, id, __raw) scored relation via ONE ``mapInArrow``
-    NumPy kernel — the §4.2 alternative to the literal-expression
-    encode+ADC projection. ``queries`` carry ALREADY grid-quantized
-    query vectors (same ``_quantize_half_away`` the literal path uses).
-
-    Bit-exactness contract with the JVM path (each step replicates the
-    exact IEEE-double op sequence of the expressions it replaces):
-
-    * grid quantization: ``copysign(floor(abs(x)·scale + 0.5), x)/scale``
-      elementwise — the test-pinned twin of Spark's HALF-AWAY ``F.round``
-      (see ``_quantize_half_away``);
-    * ``dot``/``xx`` folds: sequential left-to-right adds, vectorized
-      ACROSS rows (one fused multiply-add per dimension index — the same
-      per-row op order as ``aggregate(zip_with(...))``);
-    * assignment: ``(xx − 2·dot) + cc`` with ``cc`` the identical
-      Python-side fold; argmin scans centroids in ``str(cell)`` order so
-      first-occurrence ties replicate ``array_min``'s (dist,
-      cell-STRING) struct comparison;
-    * ADC: Σ_s LUT_s[code_s] left-to-right over the shared
-      :func:`_pq_luts` entries. The caller applies the SAME JVM
-      ``F.round(__raw·1e6)/1e6`` quantization the literal path uses.
-
-    The kernel ships only (id, vec) into Arrow (float32 stays float32
-    across the boundary — §2.3 narrower bytes; widening to float64
-    happens in NumPy, exactly like the JVM cast)."""
-    import numpy as np
-
-    m = len(codebooks)
-    sub_d = len(codebooks[0][0][1])
-    # centroid matrices in str(cell) scan order (tie-break replication)
-    cb = []
-    for s in range(m):
-        ordered = sorted(codebooks[s], key=lambda t: str(int(t[0])))
-        cells = np.array([int(ci) for ci, _ in ordered], dtype=np.int64)
-        cents = np.array([list(c) for _, c in ordered], dtype=np.float64)
-        cc = np.array(
-            [sum((v * v for v in c), 0.0) for _, c in ordered], dtype=np.float64
-        )
-        cb.append((cells, cents, cc))
-    qluts = [
-        (int(qid), [np.asarray(l, dtype=np.float64) for l in _pq_luts(qv, codebooks, sub_d)])
-        for qid, qv in queries
-    ]
-    fscale = float(scale)
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            col = batch.column(1)
-            if isinstance(col, pa.ChunkedArray):  # pragma: no cover
-                col = col.combine_chunks()
-            n = len(col)
-            if n == 0:
-                continue
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            x = flat.astype(np.float64, copy=False).reshape(n, -1)
-            # grid quantization (HALF-AWAY twin of F.round)
-            xq = np.copysign(np.floor(np.abs(x) * fscale + 0.5), x) / fscale
-            codes = np.empty((n, m), dtype=np.int64)
-            for s in range(m):
-                cells, cents, cc = cb[s]
-                xs = xq[:, s * sub_d : (s + 1) * sub_d]
-                xx = np.zeros(n, dtype=np.float64)
-                for j in range(sub_d):
-                    xx = xx + xs[:, j] * xs[:, j]
-                k_s = cents.shape[0]
-                dist = np.empty((n, k_s), dtype=np.float64)
-                for t in range(k_s):
-                    dot = np.zeros(n, dtype=np.float64)
-                    for j in range(sub_d):
-                        dot = dot + xs[:, j] * cents[t, j]
-                    dist[:, t] = (xx - 2.0 * dot) + cc[t]
-                codes[:, s] = cells[np.argmin(dist, axis=1)]
-            out_q, out_id, out_raw = [], [], []
-            for qid, luts in qluts:
-                acc = luts[0][codes[:, 0]]
-                for s in range(1, m):
-                    acc = acc + luts[s][codes[:, s]]
-                out_q.append(np.full(n, qid, dtype=np.int64))
-                out_id.append(ids)
-                out_raw.append(acc)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_q), type=pa.int64()),
-                    pa.array(np.concatenate(out_id), type=pa.int64()),
-                    pa.array(np.concatenate(out_raw), type=pa.float64()),
-                ],
-                names=["query_id", "id", "__raw"],
-            )
-
-    base = df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("__v")
-    )
-    return base.mapInArrow(
-        kernel, "query_id long, id long, __raw double"
-    )
 
 
 def _pq_codes_from(frame: DataFrame, codebooks, extra: tuple[str, ...] = ()):
@@ -1033,7 +916,6 @@ def pq_search(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
     scale: float = 1e6,
-    arrow_kernel: bool | None = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: the query stays
     full-precision, each corpus vector is its m codes, and the distance
@@ -1045,19 +927,10 @@ def pq_search(
     LUT[s][code_s] — no join against the corpus vectors at all, the
     scored relation carries only (id, m codes). Scores are quantized to
     1e-6 before ranking (engine-reproducible rank order, same contract
-    as IVF/BM25). Returns (query_id, id, adc_dist, rank).
-
-    ``arrow_kernel`` (r15, guide §4.2): route encode+ADC through ONE
-    ``mapInArrow`` NumPy kernel (:func:`_pq_scored_arrow`) instead of
-    the literal-expression projection; ``None`` uses
-    ``PQ_ARROW_KERNEL_DEFAULT``. The kernel replicates the JVM op
-    sequence bit-for-bit (its docstring is the contract) and the final
-    1e-6 quantization and ranking stay JVM-side either way."""
+    as IVF/BM25). Returns (query_id, id, adc_dist, rank)."""
     from pyspark.sql import Window
 
     sub_d = len(codebooks[0][0][1])
-    if arrow_kernel is None:
-        arrow_kernel = PQ_ARROW_KERNEL_DEFAULT
     qrows = queries.select(
         F.col(query_id_col).cast("long").alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
@@ -1077,24 +950,6 @@ def pq_search(
     # can outrank genuine neighbors (review r5). Filter the source
     # vector — same contract as pq_train's isNotNull guard.
     nn = df.where(F.col(vec_col).isNotNull())
-    if arrow_kernel:
-        qqs = [
-            (
-                int(qr["query_id"]),
-                [_quantize_half_away(float(x), scale) for x in qr["qv"]],
-            )
-            for qr in qrows
-        ]
-        scored = _pq_scored_arrow(
-            nn, codebooks, qqs, vec_col, id_col, scale
-        ).select(
-            "query_id",
-            "id",
-            (F.round(F.col("__raw") * 1e6) / F.lit(1e6)).alias("adc_dist"),
-        )
-        return scored.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= k
-        )
     enc = pq_encode(nn, codebooks, vec_col, id_col, scale)
     # ONE corpus scan scores every query: each row emits an array of
     # (query_id, adc_dist) structs — q·m LUT lookups per row — and an

@@ -27,10 +27,9 @@ Three sampling modes, with an honest cost model:
   tables with no convenient key. Same cost model: CPU saved, IO not.
 * ``level="files"`` — deterministically pick a hash-share of the
   table's parquet FILES and read only those: the mode that actually
-  cuts IO at 100 TB (same honesty precedent as multimodal
-  repartition_by_size estimate="sample"). The sample is clustered by
-  file, so intervals carry a design effect the caller should treat as
-  approximate; row-level modes have clean binomial semantics.
+  cuts IO at 100 TB. The sample is clustered by file, so intervals
+  carry a design effect the caller should treat as approximate;
+  row-level modes have clean binomial semantics.
 """
 
 from __future__ import annotations
