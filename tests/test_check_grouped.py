@@ -90,3 +90,21 @@ def test_check_grouped_single_job_plan(seg):
     # one shuffle keyed on the segment, map-side partial aggregation
     assert plan.count("Exchange") <= 1
     assert "partial_count" in plan
+
+
+def test_check_grouped_reuses_compiled_specs(seg, monkeypatch):
+    """A second grouped call on the same schema compiles nothing: each
+    validator's specs are reused, as a streamed check reuses them."""
+    calls = []
+    orig = NullValidator.specs
+    monkeypatch.setattr(
+        NullValidator, "specs", lambda self, df: calls.append(1) or orig(self, df)
+    )
+    suite = [NullValidator("v"), RangeValidator("v", 0, 100)]
+    first = check_grouped(seg, "g", suite)
+    assert calls == [1]
+    second = check_grouped(seg, "g", suite)
+    assert calls == [1]
+    assert {g: (r.success, len(r.issues)) for g, r in first.items()} == {
+        g: (r.success, len(r.issues)) for g, r in second.items()
+    }

@@ -36,7 +36,7 @@ from truthound_spark.pipeline.dedup import (
 
 DEDUP_CLUSTERS_JOBS = 13
 PROBE_JOBS = 10
-INCREMENTAL_JOBS = 24
+INCREMENTAL_JOBS = 21
 # Classes a warm round may recompile. Which classes fall out depends on how
 # their keys hash into the cache's segments, and that changes with every
 # JVM: a round recompiled 132 before the dedup calls cut their plans, and

@@ -61,8 +61,7 @@ def test_band_bucket_hashes_longs_not_strings(spark):
     """Banding v2 (r14): the LSH bucket is xxhash64 over the band's
     minhash LONGS directly — the v1 CAST-to-STRING + concat_ws form
     allocated ~10 chars per hash per corpus row before hashing (2.6×
-    slower map-side at 2M rows, benchmarks/band_hash_probe.py). The
-    candidate pair set is unchanged (bucket equality == band tuple
+    slower map-side at 2M rows). The candidate pair set is unchanged (bucket equality == band tuple
     equality either way), so only the plan shape needs pinning."""
     from truthound_spark.pipeline.dedup import _band_entries, minhash_signatures
 

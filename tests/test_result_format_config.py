@@ -79,12 +79,18 @@ def test_check_accepts_config(bad_df):
 
 def test_legacy_enum_and_sample_limit_still_work(bad_df):
     ex = BatchExpressionExecutor(
-        [RangeValidator("v", 0, 100)],
-        result_format=ResultFormat.BASIC,
-        sample_limit=1,
+        [RangeValidator("v", 0, 100)], result_format=ResultFormat.BASIC
     )
     issues = ex.execute(bad_df)
-    assert len(issues[0].sample_values) == 1
+    assert len(issues[0].sample_values) == 4  # every bad value, under the default 20
+    # the sample size is set on the config
+    ex1 = BatchExpressionExecutor(
+        [RangeValidator("v", 0, 100)],
+        result_format=ResultFormatConfig(
+            format=ResultFormat.BASIC, partial_unexpected_count=1
+        ),
+    )
+    assert len(ex1.execute(bad_df)[0].sample_values) == 1
     # boolean-only default: no evidence jobs at all
     ex2 = BatchExpressionExecutor([RangeValidator("v", 0, 100)])
     issues2 = ex2.execute(bad_df)

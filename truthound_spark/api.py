@@ -11,10 +11,9 @@ from __future__ import annotations
 from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from truthound_spark.adapters import get_spark, to_dataframe
-from truthound_spark.core.executor import BatchExpressionExecutor
+from truthound_spark.core.executor import BatchExpressionExecutor, _compile_suite
 from truthound_spark.core.registry import resolve
 from truthound_spark.core.results import ValidationRunResult
 from truthound_spark.types import ResultFormat, Severity
@@ -237,32 +236,10 @@ def check_grouped(
             f"only; these run driver-side loops: {unsupported}"
         )
     # compile against the non-group columns so auto-targeting validators
-    # never gate the segment key itself
+    # never gate the segment key itself; a suite re-run on the same schema
+    # reuses each validator's compiled specs
     body = df.drop(group_col)
-    from truthound_spark.core.base import ExpressionSpec
-    from truthound_spark.core.results import ValidationIssue
-
-    compiled: list[tuple[str, ExpressionSpec]] = []
-    compile_errors: list[ValidationIssue] = []
-    for vi, v in enumerate(vs):
-        try:
-            for si, spec in enumerate(v.specs(body)):
-                compiled.append((f"s{vi}_{si}", spec))
-        except Exception as exc:
-            compile_errors.append(
-                ValidationIssue(
-                    column=None,
-                    issue_type="execution_error",
-                    count=0,
-                    severity=Severity.HIGH,
-                    validator_name=getattr(v, "name", type(v).__name__),
-                    details=f"spec compilation failed: {exc}",
-                    exception_info={"type": type(exc).__name__, "message": str(exc)},
-                )
-            )
-    agg_cols = [F.count(F.lit(1)).cast("long").alias("__row_count")]
-    for prefix, spec in compiled:
-        agg_cols.extend(spec.agg_columns(prefix))
+    compiled, agg_cols, compile_errors = _compile_suite(vs, body)
     rows = df.groupBy(group_col).agg(*agg_cols).limit(max_groups + 1).collect()
     if len(rows) > max_groups:
         raise ValueError(

@@ -35,9 +35,6 @@ from truthound_spark.core.base import ExpressionSpec, Validator
 from truthound_spark.core.results import ValidationIssue
 from truthound_spark.types import ResultFormat, ResultFormatConfig, Severity
 
-#: Evidence sample size per issue (reference: SafeSampler, base.py:204-217).
-SAMPLE_LIMIT = 20
-
 _PLAIN = (
     type(None), bool, int, float, complex, str, bytes, Decimal,
     datetime.date, datetime.time, datetime.timedelta, Enum,
@@ -113,21 +110,47 @@ def _compile(
     return members, agg_cols
 
 
+def _compile_suite(
+    validators: list[Validator], df: DataFrame
+) -> tuple[list[tuple[str, ExpressionSpec]], list[Column], list[ValidationIssue]]:
+    """The suite's (prefix, spec) members and its aggregate Columns, led
+    by ``__row_count``, each validator compiled by :func:`_compile`; a
+    validator whose specs fail to compile is left out and reported as an
+    ``execution_error`` issue (exception isolation: base.py:426-548)."""
+    compiled: list[tuple[str, ExpressionSpec]] = []
+    agg_cols = [F.count(F.lit(1)).cast("long").alias("__row_count")]
+    errors: list[ValidationIssue] = []
+    for vi, validator in enumerate(validators):
+        try:
+            members, cols = _compile(validator, vi, df)
+        except Exception as exc:
+            errors.append(
+                ValidationIssue(
+                    column=None,
+                    issue_type="execution_error",
+                    count=0,
+                    severity=Severity.HIGH,
+                    validator_name=validator.name,
+                    details=f"spec compilation failed: {exc}",
+                    exception_info={"type": type(exc).__name__, "message": str(exc)},
+                )
+            )
+            continue
+        compiled.extend(members)
+        agg_cols.extend(cols)
+    return compiled, agg_cols, errors
+
+
 class BatchExpressionExecutor:
     def __init__(
         self,
         validators: list[Validator],
         result_format: ResultFormat | str | ResultFormatConfig = ResultFormat.BOOLEAN_ONLY,
-        sample_limit: int = SAMPLE_LIMIT,
     ) -> None:
         self.validators = validators
         cfg = ResultFormatConfig.from_any(result_format)
-        if sample_limit != SAMPLE_LIMIT:
-            # legacy knob: pre-config callers sized the sample list here
-            cfg = cfg.replace(partial_unexpected_count=sample_limit)
         self.format_config = cfg
         self.result_format = cfg.format
-        self.sample_limit = cfg.partial_unexpected_count
 
     def execute(self, df: DataFrame) -> list[ValidationIssue]:
         issues, _ = self.execute_with_stats(df)
@@ -137,26 +160,7 @@ class BatchExpressionExecutor:
         self, df: DataFrame
     ) -> tuple[list[ValidationIssue], dict[str, Any]]:
         # Phase 0: compile all validators to specs (reused per schema).
-        compiled: list[tuple[str, ExpressionSpec]] = []
-        agg_cols = [F.count(F.lit(1)).cast("long").alias("__row_count")]
-        exec_issues: list[ValidationIssue] = []
-        for vi, validator in enumerate(self.validators):
-            try:
-                members, cols = _compile(validator, vi, df)
-                compiled.extend(members)
-                agg_cols.extend(cols)
-            except Exception as exc:  # exception isolation: base.py:426-548
-                exec_issues.append(
-                    ValidationIssue(
-                        column=None,
-                        issue_type="execution_error",
-                        count=0,
-                        severity=Severity.HIGH,
-                        validator_name=validator.name,
-                        details=f"spec compilation failed: {exc}",
-                        exception_info={"type": type(exc).__name__, "message": str(exc)},
-                    )
-                )
+        compiled, agg_cols, exec_issues = _compile_suite(self.validators, df)
 
         # Phase 1: ONE fused aggregation job for the whole suite. If any
         # single spec poisons Spark analysis/execution (e.g. a validator

@@ -6,8 +6,8 @@ MinHash+LSH, SimHash, and n-gram-Jaccard dedup over a documents table.
 Scale design:
   * exact          — groupBy on a content hash (one shuffle on the hash key,
                      map-side combine; never a full-row comparison)
-  * minhash_lsh    — shingle→minhash→band→bucket-join: candidate pairs are
-                     generated ONLY within LSH buckets (band-key shuffle),
+  * minhash_lsh    — shingle→minhash→band→bucket grouping: candidate pairs
+                     are generated ONLY within LSH buckets (band-key shuffle),
                      turning the O(n²) pair space into near-linear work;
                      signatures are computed with JVM-side xxhash64 over
                      shingle arrays (no Python in the row path)
@@ -39,7 +39,9 @@ logger = logging.getLogger(__name__)
 #: ~131k while star-degrading only buckets that are duplicate families
 #: anyway (connectivity via the bucket-min hub is preserved for members
 #: that verify against it). Pass ``max_bucket_size=None`` for the exact
-#: all-pairs semantics — the mode the DuckDB oracle slots pin.
+#: all-pairs semantics — the mode the DuckDB oracle slots pin. Both modes
+#: expand pairs in :func:`_bucket_pairs` and measure their bound there;
+#: ``None`` only expands every bucket in full.
 DEFAULT_MAX_BUCKET_SIZE = 512
 
 #: Byte budget under which a candidate-PAIR relation may be broadcast
@@ -447,14 +449,15 @@ def minhash_signature(col: Column, num_hashes: int = 64, shingle_n: int = 3) -> 
 def _band_entries(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, band, bucket) LSH band entries from a signature table — each
     band's bucket is one xxhash64 over that band's row of minhashes.
-    Shared by the self-join candidate stage and the persisted index
-    (``write_dedup_index``) so stored and live banding can never drift.
+    Shared by the candidate stage (:func:`_bucket_pairs`) and the
+    persisted index (``write_dedup_index``) so stored and live banding can
+    never drift.
 
     The bucket hashes the band's minhash LONGS directly (multi-arg
     xxhash64) rather than stringifying them (r14, guide §1.2 per-task
     work): the former CAST-to-STRING + concat_ws form allocated ~10
     chars per hash per corpus row before hashing — measured 2.6× slower
-    map-side at 2M rows × 32 bands (benchmarks/band_hash_probe.py).
+    map-side at 2M rows × 32 bands.
     Collision SEMANTICS are unchanged: two docs share a bucket iff their
     band's hash tuple is equal (either form), modulo ~2⁻⁶⁴ xxhash64
     collisions that only ADD candidates for the Jaccard verify to drop —
@@ -514,7 +517,8 @@ def minhash_lsh_candidates(
     engages, a warning logs the observed worst bucket. Pass ``None``
     for exact all-pairs semantics — the mode the DuckDB oracle slots
     pin — and/or run exact dedup first so identical documents never
-    form the bucket.
+    form the bucket. Both modes run the same candidate stage
+    (:func:`_bucket_pairs`); ``None`` only stops the star degradation.
 
     The signature table is aggregated (a real shuffle barrier), so band
     bucket hashes are cheap column refs — Catalyst cannot re-inline the
@@ -537,14 +541,13 @@ def _lsh_pair_rows(
     max_bucket_size: int | None,
     _shingles: DataFrame | None = None,
     _hashed_shingles: DataFrame | None = None,
-) -> tuple[DataFrame, int | None]:
+) -> tuple[DataFrame, int]:
     """(id_a, id_b) rows with id_a < id_b: every candidate pair of
     :func:`minhash_lsh_candidates`, possibly more than once — the caller
     deduplicates (``dropDuplicates``, or a ``collect_set`` grouping that
     needs the same shuffle anyway) — and a measured upper bound on the
-    number of distinct pairs (the expansion size summed over the distinct
-    member sets; None on the exact self-join path, which has no
-    materialized step to measure it on)."""
+    number of distinct pairs, in both the capped and the exact mode: the
+    signature table's band entries through :func:`_bucket_pairs`."""
     if bands > num_hashes or num_hashes % bands != 0:
         raise ValueError(
             f"bands must divide num_hashes (got num_hashes={num_hashes}, "
@@ -561,55 +564,54 @@ def _lsh_pair_rows(
         _shingles=_shingles,
         _hashed_shingles=_hashed_shingles,
     )
-    if max_bucket_size is None:
-        # materialize the aggregated signature table once (narrow: one
-        # row of k longs per doc); the banded self-join below re-derives
-        # band bucket hashes from it on both sides as cheap column math
-        # instead of materializing the bands×-wider exploded entry table
-        band_entries = _band_entries(
-            sig.localCheckpoint(eager=True), num_hashes, bands
-        )
-        left = band_entries.alias("a")
-        right = band_entries.alias("b")
-        pairs = left.join(
-            right,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        return pairs, None
-    # ONE groupBy collects each colliding bucket's sorted member ids
-    # (state is O(bucket size) longs — bounded by the corpus, never
-    # quadratic), then pairs are EXPANDED MAP-SIDE from the arrays:
-    # n ≤ cap buckets emit all C(n,2) pairs (≤ ~131k structs per bucket
-    # at the default cap, built inside whole-stage codegen by nested
-    # transform/slice — no Python), n > cap buckets emit O(n) star edges
-    # from the min-id hub. Singleton buckets can neither pair nor star
-    # and are dropped before the checkpoint.
-    #
-    # Pairs expand from the DISTINCT member sets, not from every
-    # (band, bucket) row (r14, guide §2.3 shuffle fewer bytes): on a
-    # duplicate-heavy corpus — exactly the dedup workload — all b bands of
-    # an m-copy duplicate group collide on the SAME sorted member list,
-    # so expanding per band-bucket emits each pair up to b times only for
-    # the caller's dedup to discard (measured at the 500k-doc decade
-    # corpus: 1.02M grouped rows → 630k distinct member sets, ~800M
-    # pre-dedup pair rows → ~35M, candidate stage 25.9 → 8.8 s, pair set
-    # bit-identical). The member-set grouping runs inside the checkpoint
-    # job and keeps ``n``, the number of band-buckets per set, so the
-    # skew-guard stats are still band-bucket counts, observed on that
-    # same job: worst bucket = max set size, over-cap buckets = sum of
-    # ``n`` over sets larger than the cap. The same job measures the
-    # expansion size, an upper bound on the distinct candidate pairs.
-    # The signature table is consumed once here, inside the same
-    # checkpoint job: its aggregation is the shuffle barrier that keeps
-    # the shingle pipeline out of the band expressions.
-    small = F.size("ids") <= max_bucket_size
+    return _bucket_pairs(_band_entries(sig, num_hashes, bands), max_bucket_size)
+
+
+def _bucket_pairs(
+    entries: DataFrame, max_bucket_size: int | None
+) -> tuple[DataFrame, int]:
+    """(id_a, id_b) rows with id_a < id_b for the ids that share a
+    (band, bucket) in ``entries`` (id, band, bucket), possibly repeated,
+    and the number of rows — an upper bound on the distinct pairs. The
+    one candidate producer of the banded-LSH operators: minhash
+    (:func:`_lsh_pair_rows`), the embedding sign-LSH of
+    :func:`embedding_near_duplicates` and ``neighbors.lof_embeddings``.
+
+    ONE groupBy collects each bucket's DISTINCT sorted member ids (state
+    is O(bucket size) ids — bounded by the corpus, never quadratic; a
+    repeated id pairs with nothing, least of all itself); singleton
+    buckets are dropped. Pairs then expand from the distinct member SETS,
+    not from every (band, bucket) row (r14, guide §2.3 shuffle fewer
+    bytes): on a duplicate-heavy corpus — exactly the dedup workload — all
+    b bands of an m-copy duplicate group collide on the SAME sorted member
+    list, so expanding per band-bucket emits each pair up to b times only
+    for the caller's dedup to discard (measured at the 500k-doc decade
+    corpus: 1.02M grouped rows → 630k distinct member sets, ~800M
+    pre-dedup pair rows → ~35M, candidate stage 25.9 → 8.8 s, pair set
+    bit-identical).
+
+    The member-set grouping runs inside ONE checkpoint job, which also
+    observes the pair bound and the skew-guard stats, keeping ``n``, the
+    number of band-buckets per set, so they are band-bucket counts: worst
+    bucket = max set size, over-cap buckets = sum of ``n`` over sets
+    larger than ``max_bucket_size``. A set of m ≤ cap members (every set,
+    with no cap) expands to all C(m, 2) pairs, a larger one to the m - 1
+    STAR edges from its min id (see :func:`minhash_lsh_candidates`); the
+    guard's warning is logged only when a cap is set and a set exceeds it.
+
+    The expansion is two generators in one codegen stage — ``posexplode``
+    of the members, then ``explode`` of each member's higher-id suffix —
+    so no generated row holds more than one member set (an uncapped
+    bucket of m members never builds an array of C(m, 2) structs), and no
+    higher-order function runs."""
+    small = (
+        F.lit(True) if max_bucket_size is None
+        else F.size("ids") <= max_bucket_size
+    )
     stats = Observation()
     grouped = (
-        _band_entries(sig, num_hashes, bands)
-        .groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
+        entries.groupBy("band", "bucket")
+        .agg(F.sort_array(F.collect_set("id")).alias("ids"))
         .filter(F.size("ids") > 1)
         .groupBy("ids")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -636,20 +638,12 @@ def _lsh_pair_rows(
             int(max_bucket_size),
             int(stats["mx"]),
         )
-    # small and star sets expand in ONE projection: a union of two
-    # filtered branches plans (and compiles) the expansion twice
-    pairs = grouped.select(
-        F.explode(
-            F.expr(
-                f"IF(size(ids) <= {int(max_bucket_size)}, "
-                "flatten(transform(ids, (x, i) -> "
-                "transform(slice(ids, i + 2, size(ids)), "
-                "y -> struct(x AS id_a, y AS id_b)))), "
-                "transform(slice(ids, 2, size(ids) - 1), "
-                "y -> struct(ids[0] AS id_a, y AS id_b)))"
-            )
-        ).alias("p")
-    ).select("p.id_a", "p.id_b")
+    members = grouped.select("ids", F.posexplode("ids").alias("i", "id_a"))
+    if max_bucket_size is not None:
+        members = members.filter(small | (F.col("i") == 0))
+    pairs = members.select(
+        "id_a", F.explode(F.expr("slice(ids, i + 2, size(ids))")).alias("id_b")
+    )
     return pairs, int(stats["pairs"] or 0)
 
 
@@ -1010,7 +1004,7 @@ def _verify_pairs_arrow(
     store: DataFrame,
     pairs: DataFrame,
     a_side: DataFrame | None,
-    n_pairs: int | None,
+    n_pairs: int,
     broadcast_pairs_budget: int,
     a_rows: int | None,
 ) -> DataFrame:
@@ -1032,11 +1026,10 @@ def _verify_pairs_arrow(
     relation — attaches once, so no array travels with a per-pair row.
     The grouped bare ids broadcast into that attach only while
     ``n_pairs``, a measured upper bound on the pairs (and so on the
-    groups), sizes them under ``broadcast_pairs_budget``; otherwise, when
-    no bound was measured, or for an ``a_side`` (the indexed probe's
-    bucketed base, whose pairs are laid out in its buckets), the attach is
-    a shuffle-hash join — in place for pairs already hash-partitioned on
-    ``id_a``.
+    groups), sizes them under ``broadcast_pairs_budget``; otherwise, or
+    for an ``a_side`` (the indexed probe's bucketed base, whose pairs are
+    laid out in its buckets), the attach is a shuffle-hash join — in place
+    for pairs already hash-partitioned on ``id_a``.
 
     The stage that attaches the a-side arrays and runs the kernel is sized
     from its two measured inputs, ``n_pairs`` and ``a_rows`` (the row count
@@ -1046,8 +1039,8 @@ def _verify_pairs_arrow(
     task instead of one per input partition (each task costs ~0.24 s of
     worker CPU before its first row, the kernel 7-62 µs per pair; see
     ``VERIFY_PAIRS_PER_TASK``). Coalescing only merges partitions, so no
-    row changes group; when either input was not measured the
-    partitioning is left as it is.
+    row changes group; when the a-side was not measured (an index that
+    recorded no doc count) the partitioning is left as it is.
 
     Bit-exactness: intersection COUNTS are integers — sorted-merge
     equality counting over the same distinct-element arrays returns
@@ -1075,7 +1068,7 @@ def _verify_pairs_arrow(
     a_arrays = (store if a_side is None else a_side).select(
         F.col("id").alias("id_a"), F.sort_array("sh").alias("sh_a")
     )
-    if n_pairs is None or a_side is not None:
+    if a_side is not None:
         rows = a_arrays.join(groups.hint("shuffle_hash"), "id_a")
     else:
         rows = _attach_pairs(
@@ -1083,7 +1076,7 @@ def _verify_pairs_arrow(
             elems=n_pairs,
         )
     rows = rows.select("id_a", "sh_a", "ids")
-    if n_pairs is not None and a_rows is not None:
+    if a_rows is not None:
         stage_rows = max(n_pairs, a_rows)
         rows = rows.coalesce(max(1, -(-stage_rows // VERIFY_PAIRS_PER_TASK)))
 
@@ -1173,13 +1166,14 @@ def _verify_pairs(
     store_bytes: int,
     broadcast_pairs_budget: int,
     shingle_broadcast_budget: int,
+    *,
+    n_pairs: int,
     a_side: DataFrame | None = None,
-    n_pairs: int | None = None,
     a_rows: int | None = None,
 ) -> DataFrame:
     """(id_a, id_b, jaccard) — exact shingle-set Jaccard of every distinct
     candidate pair in ``pairs`` (id_a, id_b; repeats allowed; ``n_pairs``
-    a measured upper bound on their number, or None). ``store``
+    a measured upper bound on their number). ``store``
     (id, sh) holds the b-side arrays, and the a-side ones unless
     ``a_side`` (id, sh) is given; ``a_rows`` is the measured row count of
     the a-side relation, or None. The one verify primitive of the minhash
@@ -1598,7 +1592,12 @@ def hamming_blocked_pairs(
     4-segment pigeonhole blocking (any pair within distance 3 agrees on
     ≥ 1 of the 4 16-bit segments) — the generic engine behind SimHash
     text near-dup AND perceptual-hash media near-dup. Join only within
-    segment buckets (linear candidates), verify with bit_count(xor)."""
+    segment buckets (linear candidates), verify with bit_count(xor).
+
+    Deliberately its own self-join, not :func:`_bucket_pairs`: the join
+    rows carry both signatures, so each pair is scored where it is
+    formed; bare id pairs from the helper would need two attach joins to
+    get the signatures back."""
     if max_hamming > 3:
         raise ValueError(
             f"max_hamming={max_hamming} exceeds the 4-segment pigeonhole "
@@ -1713,6 +1712,12 @@ def embedding_near_duplicates(
     ``num_planes`` up (each +1 halves expected bucket occupancy) and
     compensate recall with more bands.
 
+    The bands' (id, band, bucket) entries come from
+    ``similarity.sign_lsh_band_entries`` and pair up in
+    :func:`_bucket_pairs`, the candidate stage of the minhash operators,
+    uncapped: one checkpoint job at call time, then every bucket expands
+    to all its pairs.
+
     Pass ``exact=True`` for the exhaustive cross-join baseline
     (oracle-verifiable at small n), or supply your own ``candidate_df`` of
     (id_a, id_b)."""
@@ -1720,34 +1725,13 @@ def embedding_near_duplicates(
     if candidate_df is None and not exact:
         from truthound_spark.pipeline.similarity import (
             _vector_dim,
-            make_planes,
-            sign_lsh_signature,
+            sign_lsh_band_entries,
         )
 
-        dim = _vector_dim(df, vec_col)
-        # one projection computes every band's signature, then a single
-        # explode → one self-join on (band, bucket) — not num_bands joins
-        band_sigs = [
-            F.struct(
-                F.lit(band).alias("band"),
-                sign_lsh_signature(
-                    F.col("v"), make_planes(dim, num_planes, seed + 7919 * band)
-                ).alias("bucket"),
-            )
-            for band in range(num_bands)
-        ]
-        entries = (
-            v.select("id", F.explode(F.array(*band_sigs)).alias("bb"))
-            .select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+        entries = sign_lsh_band_entries(
+            v, _vector_dim(df, vec_col), num_planes, num_bands, seed
         )
-        ba = entries.select(F.col("id").alias("id_a"), "band", "bucket")
-        bb = entries.select(F.col("id").alias("id_b"), "band", "bucket")
-        candidate_df = (
-            ba.join(bb, ["band", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates()
-        )
+        candidate_df = _bucket_pairs(entries, None)[0].dropDuplicates()
     vn = v.withColumn("__n", l2_norm(F.col("v")))  # norm once per id, not per pair
     if candidate_df is not None:
         a = (
@@ -2270,14 +2254,14 @@ def incremental_dedup(
         )
         sh_size = obs.get
     sides = sh.select("id", "side")
-    cands = minhash_lsh_candidates(
-        sh, "__t", "id", num_hashes, bands, shingle_n,
-        max_bucket_size=max_bucket_size, _hashed_shingles=sh,
-    )
     # orient candidates as (new id, base id); candidates are bare id
     # pairs — broadcast into the side lookup only under the budget. Their
-    # count bounds the cross-side pairs the verify sees
-    cands, n_cands = _materialize_pairs(cands)
+    # bound, measured on the candidate checkpoint, bounds both those rows
+    # and the cross-side pairs the verify sees
+    cands, n_cands = _lsh_pair_rows(
+        sh, "__t", "id", num_hashes, bands, shingle_n, max_bucket_size,
+        _hashed_shingles=sh,
+    )
     sa = sides.select(F.col("id").alias("id_a"), F.col("side").alias("side_a"))
     sb = sides.select(F.col("id").alias("id_b"), F.col("side").alias("side_b"))
     cross = (
@@ -2467,6 +2451,8 @@ def incremental_dedup_indexed(
     write-time cap: candidate count per (band, bucket) is then bounded
     by delta-cap × index-cap even when a boilerplate-heavy batch lands
     in a boilerplate-heavy bucket. ``None`` = exact (the oracle mode).
+    The probe is a join of delta × stored members, not a self-join, so it
+    keeps its own (band, bucket) join rather than :func:`_bucket_pairs`.
 
     ``location`` (r13): the index database's storage location. When the
     prefix-string form names tables a FRESH session's catalog no longer

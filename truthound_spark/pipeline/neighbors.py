@@ -268,11 +268,11 @@ def lof_embeddings(
     (isolated-by-LSH; raise num_bands for more recall).
 
     Returns (id, lof) with one row per input vector."""
+    from truthound_spark.pipeline.dedup import _bucket_pairs
     from truthound_spark.pipeline.similarity import (
         _vector_dim,
         l2_sq,
-        make_planes,
-        sign_lsh_signature,
+        sign_lsh_band_entries,
     )
     from pyspark.sql import Window
 
@@ -281,27 +281,18 @@ def lof_embeddings(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    band_sigs = [
-        F.struct(
-            F.lit(band).alias("band"),
-            sign_lsh_signature(
-                F.col("v"), make_planes(dim, num_planes, seed + 7919 * band)
-            ).alias("bucket"),
-        )
-        for band in range(num_bands)
-    ]
-    entries = v.select(
-        "id", F.explode(F.array(*band_sigs)).alias("bb")
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    ea = entries.select(F.col("id").alias("id_a"), "band", "bucket")
-    eb = entries.select(F.col("id").alias("id_b"), "band", "bucket")
-    # DIRECTED candidate pairs (both orientations), deduped across bands
-    cands = (
-        ea.join(eb, ["band", "bucket"])
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates()
+    pairs, _ = _bucket_pairs(
+        sign_lsh_band_entries(v, dim, num_planes, num_bands, seed), None
     )
+    # DIRECTED candidate pairs (both orientations), deduped across bands
+    cands = pairs.select(
+        F.inline(
+            F.array(
+                F.struct("id_a", "id_b"),
+                F.struct(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")),
+            )
+        )
+    ).dropDuplicates()
     a = v.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
     b = v.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
     scored = (

@@ -94,6 +94,30 @@ def sign_lsh_signature(vec: "F.Column", planes: list[list[float]]) -> "F.Column"
     return sig.cast("int")
 
 
+def sign_lsh_band_entries(
+    v: DataFrame, dim: int, num_planes: int, num_bands: int, seed: int
+) -> DataFrame:
+    """(id, band, bucket) banded sign-LSH entries of an (id, v) frame:
+    band b's bucket is the :func:`sign_lsh_signature` of ``v`` under
+    ``make_planes(dim, num_planes, seed + 7919 * b)`` — the planes the
+    ``lof_embeddings`` oracle replays. One projection computes every
+    band's signature and one explode emits them. Shared by
+    ``dedup.embedding_near_duplicates`` and ``neighbors.lof_embeddings``,
+    which pair the entries up in ``dedup._bucket_pairs``."""
+    band_sigs = [
+        F.struct(
+            F.lit(band).alias("band"),
+            sign_lsh_signature(
+                F.col("v"), make_planes(dim, num_planes, seed + 7919 * band)
+            ).alias("bucket"),
+        )
+        for band in range(num_bands)
+    ]
+    return v.select("id", F.explode(F.array(*band_sigs)).alias("bb")).select(
+        "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
+
+
 def make_planes(dim: int, num_planes: int = 12, seed: int = 42) -> list[list[float]]:
     import numpy as np
 
