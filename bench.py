@@ -19,36 +19,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
-def tuning_conf() -> dict[str, str]:
-    """Env-parameterised tuning knobs (guide §9: measured, not guessed).
-
-    Both DEFAULTS equal Spark's own defaults, pinned by
-    tests/test_bench_guard.py so the driver's un-parameterised bench run
-    stays comparable across rounds. The r14 A/B evidence for keeping
-    them at the defaults is in OPTIMIZATION_r14.md:
-
-    * SHJ_LOCAL_MAP — guide §3.1: AQE rewrites sort-merge joins to
-      shuffled-hash when every post-shuffle build partition is below the
-      threshold (size-bounded ⇒ scale-adaptive, not a local[32] trick).
-      Measured at 128m over the 4 SMJ-heavy entries: lof_native REGRESSED
-      (4.9-5.5 s → 8.7-10.9 s medians), the rest within noise → default
-      stays 0 (off).
-    * IO_CODEC — guide §2.3: zstd trades CPU for ratio; pays off on
-      network-bound clusters, not a local page-cache shuffle. Measured:
-      wash-to-worse locally → default stays lz4; set zstd on real NICs.
-    """
-    return {
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": os.environ.get(
-            "SPARK_GRAFT_SHJ_LOCAL_MAP", "0"
-        ),
-        "spark.io.compression.codec": os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-    }
-
-
 def make_spark():
     from pyspark.sql import SparkSession
 
-    builder = (
+    return (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("truthound_spark_bench")
         .config("spark.sql.shuffle.partitions", CPUS)
@@ -57,10 +31,8 @@ def make_spark():
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    for key, value in tuning_conf().items():
-        builder = builder.config(key, value)
-    return builder.getOrCreate()
 
 
 def _check_dedup_index_version(spark, lsh_table: str) -> None:

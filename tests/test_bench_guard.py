@@ -248,31 +248,6 @@ def test_summary_line_query_map_floor():
     assert all(v >= 100 for v in parsed["queries"].values())
 
 
-def test_tuning_conf_defaults_match_spark_defaults(monkeypatch):
-    """r14 knob contract: with no env set, the bench session is
-    byte-identical to pre-r14 rounds (SHJ rewrite off, lz4 shuffle
-    codec) so the driver's cross-round series stays comparable. The
-    A/B evidence for keeping these defaults is in OPTIMIZATION_r14.md."""
-    monkeypatch.delenv("SPARK_GRAFT_SHJ_LOCAL_MAP", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_IO_CODEC", raising=False)
-    b = _bench()
-    conf = b.tuning_conf()
-    assert conf["spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"] == "0"
-    assert conf["spark.io.compression.codec"] == "lz4"
-
-
-def test_tuning_conf_env_overrides(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SHJ_LOCAL_MAP", "134217728")
-    monkeypatch.setenv("SPARK_GRAFT_IO_CODEC", "zstd")
-    b = _bench()
-    conf = b.tuning_conf()
-    assert (
-        conf["spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"]
-        == "134217728"
-    )
-    assert conf["spark.io.compression.codec"] == "zstd"
-
-
 def test_shuffle_canary_pinned_and_io_free():
     """r14: the shuffle canary must never be edited (cross-round
     comparability) and must actually SHUFFLE — full-width hash keys so

@@ -9,7 +9,9 @@ jobs that materialize a relation (``Dataset.observe``) must report the same
 numbers as the separate measurements they replace, and the verify store's
 broadcast must be released. The verify kernel runs in as few Python tasks as
 its stage's measured inputs (pairs and a-side rows) need: each task pays a
-fixed worker start-up cost.
+fixed worker start-up cost. No verify shape re-counts a bound the candidate
+stage measured, and a stored shingle layout is measured on the candidate
+checkpoint job, not by a separate aggregate.
 """
 
 import random
@@ -22,8 +24,10 @@ from truthound_spark.pipeline import dedup
 from truthound_spark.pipeline.dedup import (
     _TRACKED_PERSISTS,
     _hashed_shingle_arrays,
+    _lsh_pair_rows,
     _payload_bytes,
     _payload_measures,
+    _signatures,
     _verify_pairs,
     connected_components,
     dedup_clusters,
@@ -32,11 +36,16 @@ from truthound_spark.pipeline.dedup import (
     minhash_dedup_pairs,
     release_dedup_caches,
     write_dedup_index,
+    write_shingle_layout,
 )
 
 DEDUP_CLUSTERS_JOBS = 13
 PROBE_JOBS = 10
 INCREMENTAL_JOBS = 21
+# minhash_dedup_pairs of the base, collected, in the over-budget verify
+# shape (shingle_broadcast_budget=0) and over a stored shingle layout
+BUDGET0_PAIRS_JOBS = 11
+LAYOUT_PAIRS_JOBS = 8
 # Classes a warm round may recompile. Which classes fall out depends on how
 # their keys hash into the cache's segments, and that changes with every
 # JVM: a round recompiled 132 before the dedup calls cut their plans, and
@@ -79,6 +88,15 @@ def corpus(spark, tmp_path_factory):
         database="plan_reuse_db", location=location,
     )
     return base_df, delta_df, index
+
+
+@pytest.fixture(scope="module")
+def layout(spark, corpus, tmp_path_factory):
+    location = str(tmp_path_factory.mktemp("plan_reuse_layout"))
+    return write_shingle_layout(
+        corpus[0], "plan_reuse_sh", buckets=8,
+        database="plan_reuse_db", location=location,
+    )
 
 
 def _compiles(spark) -> int:
@@ -175,7 +193,7 @@ def test_release_destroys_verify_broadcast_and_next_call_is_exact(spark, corpus)
     release_dedup_caches()
 
 
-def test_observed_payload_size_equals_measured(spark, corpus):
+def test_observed_payload_size_equals_measured(spark, corpus, layout):
     base_df = corpus[0]
     size = Observation()
     sh = (
@@ -187,6 +205,51 @@ def test_observed_payload_size_equals_measured(spark, corpus):
     measured = sh.agg(*_payload_measures("sh")).collect()[0].asDict()
     assert observed == _payload_bytes(measured, 8)
     assert observed > 48 * base_df.count()
+    # a stored layout is observed on the signature input: the candidate
+    # checkpoint job measures it, with no exchange added to the plan
+    stored = spark.table(layout).select("id", "sh")
+    stored_size = Observation()
+    _lsh_pair_rows(stored.observe(stored_size, *_payload_measures("sh")), 64, 32, 512)
+    assert stored_size.get == stored.agg(*_payload_measures("sh")).collect()[0].asDict()
+    assert _payload_bytes(stored_size.get, 8) == observed
+
+    def exchanges(df) -> int:
+        return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
+
+    observed_input = stored.observe(Observation(), *_payload_measures("sh"))
+    assert exchanges(_signatures(observed_input, 64)) == exchanges(
+        _signatures(stored, 64)
+    )
+    release_dedup_caches()
+
+
+def test_pairs_jobs_per_call_over_budget_and_stored(spark, corpus, layout):
+    # the over-budget verify attaches the distinct pairs under the bound
+    # the candidate stage measured (no persist, no count), and a stored
+    # layout is measured on the candidate checkpoint job; both return the
+    # kernel shape's pairs
+    base_df = corpus[0]
+
+    def pairs(**kw):
+        return lambda: sorted(
+            tuple(r)
+            for r in minhash_dedup_pairs(base_df, threshold=0.7, **kw).collect()
+        )
+
+    kernel, _ = _jobs_of(spark, "pairs-kernel", pairs(shingle_table=None))
+    assert len(kernel) == 12
+    for attempt in ("cold", "warm"):
+        over, jobs = _jobs_of(
+            spark, f"pairs-budget0-{attempt}",
+            pairs(shingle_table=None, shingle_broadcast_budget=0),
+        )
+        assert over == kernel
+        assert jobs <= BUDGET0_PAIRS_JOBS, (attempt, jobs)
+        stored, jobs = _jobs_of(
+            spark, f"pairs-layout-{attempt}", pairs(shingle_table=layout)
+        )
+        assert stored == kernel
+        assert jobs <= LAYOUT_PAIRS_JOBS, (attempt, jobs)
 
 
 def test_cc_branch_flips_exactly_at_edge_count(spark):

@@ -68,8 +68,9 @@ DEFAULT_PAIR_BROADCAST_BUDGET = 64 << 20
 #: moves, and the intersect runs in the same stage that attached sh_a.
 #: The gate is MEASURED — row count + total elements of the broadcast
 #: table, observed on the job that checkpoints it (inline shingles, the
-#: indexed probe's delta) or one narrow aggregate over a stored bucketed
-#: table — so a corpus whose shingle relation outgrows the budget falls
+#: indexed probe's delta) or, for a stored bucketed table, on the
+#: candidate checkpoint job that reads it as the signature input — so a
+#: corpus whose shingle relation outgrows the budget falls
 #: back to the shuffle-hash shape automatically: at 100 TB the b-side is
 #: TB-scale and this broadcast never engages. 0 disables the broadcast
 #: path entirely.
@@ -188,21 +189,14 @@ def words(col: Column) -> Column:
 def word_shingles(col: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles as an array<string> column.
 
-    NOTE (perf): referencing the ``words`` macro from inside the transform
-    lambda re-evaluates the whole normalize+split pipeline PER SHINGLE
+    NOTE (perf): the ``words`` macro sits inside the transform lambda, so
+    Catalyst re-evaluates the whole normalize+split pipeline PER SHINGLE
     INDEX (no CSE across higher-order-function lambda boundaries) —
-    quadratic in document length. This Column form is kept for API
-    compatibility on small frames; pipeline code paths go through
-    ``_shingle_arrays`` / ``_shingle_rows`` which materialize the words
-    array in its own projection first (CollapseProject keeps multi-use
-    non-cheap aliases separate), making shingling linear."""
-    w = words(col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(w, i + 1, n)),
-        )
-    )
+    quadratic in document length. Fine on small frames; pipeline code
+    projects ``words`` first and shingles that column with
+    ``_shingles_of_words`` (CollapseProject keeps multi-use non-cheap
+    aliases separate), which is linear — see ``_shingle_arrays``."""
+    return _shingles_of_words(words(col), n)
 
 
 def _shingles_of_words(w: Column, n: int) -> Column:
@@ -230,10 +224,11 @@ def _shingle_arrays(
 def _hashed_shingle_arrays(
     df: DataFrame, text_col: str, id_col: str, n: int
 ) -> DataFrame:
-    """(id, sh: array<long>) — shingles hashed to 64 bits AT THE SOURCE.
+    """(id, sh: array<long>) — shingles hashed to 64 bits AT THE SOURCE:
+    the hashed shingle STORE, the one input of the MinHash signature
+    stage (:func:`_signatures`) and of the Jaccard verify.
 
-    The minhash pipeline's internal representation: every downstream
-    consumer (signature min-aggs, Jaccard verification intersects, the
+    Every consumer (signature min-aggs, verification intersects, the
     checkpoint itself) only ever needs shingle IDENTITY, so hashing once
     here replaces string arrays with long arrays — smaller checkpoint,
     cheaper explode, integer instead of string comparisons in
@@ -243,18 +238,14 @@ def _hashed_shingle_arrays(
     collision WITHIN one candidate pair's shingle union — P ≈ |union|²/2⁶⁵
     ≈ 1e-12 at 10⁴ shingles/doc. Corpus-wide birthday collisions across
     different pairs don't affect any pair's intersect/union counts."""
-    base = _ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
-    )
-    w = base.select("id", words(F.col("__t")).alias("__w"))
-    sh = w.select("id", _shingles_of_words(F.col("__w"), n).alias("__sh"))
-    return sh.select(
-        "id", F.transform("__sh", lambda s: F.xxhash64(s)).alias("sh")
+    return _shingle_arrays(df, text_col, id_col, n).select(
+        "id", F.transform("sh", lambda s: F.xxhash64(s)).alias("sh")
     )
 
 
 def _shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """(id, g: string) exploded shingles — the minhash input.
+    """(id, g: string) exploded shingles — the n-gram overlap input of
+    the decontamination operators.
 
     explode_outer, NOT explode: Catalyst's InferFiltersFromGenerate adds a
     ``size(sh) > 0`` filter for plain explode, and filter pushdown inlines
@@ -265,11 +256,8 @@ def _shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
     so outer semantics are identical; the null guard is belt-and-braces.
 
     The empty shingle '' (null / punctuation-only / empty documents all
-    normalize to it) is filtered: otherwise every contentless document
-    shares ONE MinHash signature, forming a single giant LSH bucket whose
-    self-join is O(m²) in the count of empty docs — a real-corpus job
-    killer. Contentless docs simply have no signature here; exact-dedup
-    (fingerprint groupBy) is the right tool for them."""
+    normalize to it) is filtered, so contentless documents overlap
+    nothing — as in the MinHash signature stage (:func:`_signatures`)."""
     return (
         _shingle_arrays(df, text_col, id_col, n)
         .select("id", F.explode_outer("sh").alias("g"))
@@ -356,21 +344,30 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     shingle_n: int = 3,
-    _shingles: DataFrame | None = None,
-    _hashed_shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-document MinHash signature columns h0..h{k-1} (bigint).
+    """Per-document MinHash signature columns h0..h{k-1} (bigint): the
+    hashed shingle store of ``df`` (:func:`_hashed_shingle_arrays`)
+    through :func:`_signatures`, the signature stage every MinHash caller
+    runs. A document's hᵢ is ``min(pmod(aᵢ·pmod(xxhash64(g), p) + bᵢ, p))``
+    over its distinct non-empty word shingles g."""
+    return _signatures(
+        _hashed_shingle_arrays(df, text_col, id_col, shingle_n), num_hashes
+    )
 
-    Plan shape: explode distinct shingles ONCE, hash each shingle's BYTES
-    once (JVM xxhash64 → 31-bit residue), then derive the k independent
-    hash families as seeded affine transforms ``(aᵢ·x + bᵢ) mod p``
-    (p = 2³¹-1 — the classic universal-hash MinHash construction, same
-    family Spark MLlib's MinHashLSH uses), and ONE groupBy(id) computing k
-    ``min`` aggregates (map-side partial agg). Hashing the string k times
-    instead would put k full string-hash passes in the hot loop — the
-    affine form replaces k-1 of them with two integer ops each, the
-    dominant CPU saving at corpus scale. Operands stay < 2³¹ so products
-    fit a long — no ANSI overflow.
+
+def _signatures(sh: DataFrame, num_hashes: int) -> DataFrame:
+    """(id, h0..h{k-1}) MinHash signatures of a hashed shingle store
+    ``sh`` (id, sh: array<long>).
+
+    Plan shape: explode the store's shingle hashes ONCE, reduce each to a
+    31-bit residue, then derive the k independent hash families as seeded
+    affine transforms ``(aᵢ·x + bᵢ) mod p`` (p = 2³¹-1 — the classic
+    universal-hash MinHash construction, same family Spark MLlib's
+    MinHashLSH uses), and ONE groupBy(id) computing k ``min`` aggregates
+    (map-side partial agg). The shingle strings were hashed once, in the
+    store; the affine form replaces k-1 further hash passes with two
+    integer ops each, the dominant CPU saving at corpus scale. Operands
+    stay < 2³¹ so products fit a long — no ANSI overflow.
 
     Deliberately NOT a single giant nested-array expression: inlining k
     ``array_min(transform(...))`` macros gets re-expanded by Catalyst's
@@ -379,30 +376,21 @@ def minhash_signatures(
     long before data size matters. The exploded+aggregated form keeps the
     expression tree linear in k and scales to any corpus.
 
-    ``_shingles``: optional precomputed (id, sh) frame (from
-    ``_shingle_arrays``) so pipelines that also need the raw shingles for
-    Jaccard verification shingle each document exactly once.
-    ``_hashed_shingles``: same, but (id, array<long>) from
-    ``_hashed_shingle_arrays`` — the shingle string is hashed exactly once
-    at the source; this stage only re-residues the longs."""
-    if _hashed_shingles is not None:
-        # filter the hash of the empty shingle (same rationale as the
-        # string filter below; xxhash64('') is constant-folded)
-        hashed = (
-            _hashed_shingles.select("id", F.explode_outer("sh").alias("g"))
-            .filter(F.col("g").isNotNull() & (F.col("g") != F.xxhash64(F.lit(""))))
-            .select("id", F.pmod(F.col("g"), F.lit(_MERSENNE_31)).alias("x"))
-        )
-    else:
-        if _shingles is not None:
-            sh = _shingles.select("id", F.explode_outer("sh").alias("g")).filter(
-                F.col("g").isNotNull() & (F.col("g") != "")
-            )
-        else:
-            sh = _shingle_rows(df, text_col, id_col, shingle_n)
-        hashed = sh.select(
-            "id", F.pmod(F.xxhash64(F.col("g")), F.lit(_MERSENNE_31)).alias("x")
-        )
+    explode_outer, NOT explode: Catalyst's InferFiltersFromGenerate adds a
+    ``size(sh) > 0`` filter for plain explode, and filter pushdown inlines
+    the ENTIRE shingle pipeline of an inline store into that predicate —
+    re-running normalize+split once per shingle index (quadratic per
+    document). The hash of the empty shingle '' (null / punctuation-only
+    / empty documents all normalize to it; ``xxhash64('')`` is
+    constant-folded) is filtered: otherwise every contentless document
+    shares ONE signature, forming a single giant LSH bucket. Contentless
+    docs simply have no signature here; exact-dedup (fingerprint groupBy)
+    is the right tool for them."""
+    hashed = (
+        sh.select("id", F.explode_outer("sh").alias("g"))
+        .filter(F.col("g").isNotNull() & (F.col("g") != F.xxhash64(F.lit(""))))
+        .select("id", F.pmod(F.col("g"), F.lit(_MERSENNE_31)).alias("x"))
+    )
     coefs = _minhash_coefficients(num_hashes)
     # one F.expr per hash family instead of ~8 py4j round trips each
     # (r14, litexpr rationale): the k agg expressions are rendered as SQL
@@ -429,21 +417,6 @@ def _minhash_coefficients(num_hashes: int) -> list[tuple[int, int]]:
         (rng.randrange(1, _MERSENNE_31), rng.randrange(0, _MERSENNE_31))
         for _ in range(num_hashes)
     ]
-
-
-def minhash_signature(col: Column, num_hashes: int = 64, shingle_n: int = 3) -> Column:
-    """MinHash signature as a single array<bigint> Column (expression form).
-
-    Kept for column-level composition on SMALL frames; prefer
-    ``minhash_signatures`` (DataFrame form) in pipelines — see its
-    docstring for why the inline macro form must not feed LSH banding."""
-    sh = word_shingles(col, shingle_n)
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, lambda s, i=i: F.xxhash64(F.lit(i), s)))
-            for i in range(num_hashes)
-        ]
-    )
 
 
 def _band_entries(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -492,8 +465,6 @@ def minhash_lsh_candidates(
     bands: int = 32,
     shingle_n: int = 3,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    _shingles: DataFrame | None = None,
-    _hashed_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded LSH.
 
@@ -520,34 +491,28 @@ def minhash_lsh_candidates(
     form the bucket. Both modes run the same candidate stage
     (:func:`_bucket_pairs`); ``None`` only stops the star degradation.
 
-    The signature table is aggregated (a real shuffle barrier), so band
+    The signatures come from the hashed shingle store of ``df``
+    (:func:`_hashed_shingle_arrays`), as in every dedup call; the
+    signature table is aggregated (a real shuffle barrier), so band
     bucket hashes are cheap column refs — Catalyst cannot re-inline the
     shingle pipeline into them.
     """
-    pairs, _ = _lsh_pair_rows(
-        df, text_col, id_col, num_hashes, bands, shingle_n, max_bucket_size,
-        _shingles=_shingles, _hashed_shingles=_hashed_shingles,
-    )
+    sh = _hashed_shingle_arrays(df, text_col, id_col, shingle_n)
+    pairs, _ = _lsh_pair_rows(sh, num_hashes, bands, max_bucket_size)
     return pairs.dropDuplicates()
 
 
 def _lsh_pair_rows(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-    max_bucket_size: int | None,
-    _shingles: DataFrame | None = None,
-    _hashed_shingles: DataFrame | None = None,
+    sh: DataFrame, num_hashes: int, bands: int, max_bucket_size: int | None
 ) -> tuple[DataFrame, int]:
-    """(id_a, id_b) rows with id_a < id_b: every candidate pair of
-    :func:`minhash_lsh_candidates`, possibly more than once — the caller
-    deduplicates (``dropDuplicates``, or a ``collect_set`` grouping that
-    needs the same shuffle anyway) — and a measured upper bound on the
-    number of distinct pairs, in both the capped and the exact mode: the
-    signature table's band entries through :func:`_bucket_pairs`."""
+    """(id_a, id_b) rows with id_a < id_b: every candidate pair of the
+    hashed shingle store ``sh`` (id, sh: array<long>), possibly more than
+    once — the caller deduplicates (``dropDuplicates``, or a
+    ``collect_set`` grouping that needs the same shuffle anyway) — and a
+    measured upper bound on the number of distinct pairs, in both the
+    capped and the exact mode: the store's signatures, banded, through
+    :func:`_bucket_pairs`. An observation attached to ``sh`` lands on
+    that function's checkpoint job."""
     if bands > num_hashes or num_hashes % bands != 0:
         raise ValueError(
             f"bands must divide num_hashes (got num_hashes={num_hashes}, "
@@ -555,15 +520,7 @@ def _lsh_pair_rows(
             "one shared bucket (all-pairs join), and a remainder silently "
             "drops trailing hashes"
         )
-    sig = minhash_signatures(
-        df,
-        text_col,
-        id_col,
-        num_hashes,
-        shingle_n,
-        _shingles=_shingles,
-        _hashed_shingles=_hashed_shingles,
-    )
+    sig = _signatures(sh, num_hashes)
     return _bucket_pairs(_band_entries(sig, num_hashes, bands), max_bucket_size)
 
 
@@ -966,9 +923,10 @@ def _payload_bytes(measures: dict, elem_bytes: int) -> int:
     48 B a row, ``elem_bytes`` an element, plus the elements' own
     word-rounded bytes where they were measured. The values are real
     measurements, not a Catalyst estimate, because the verify-stage
-    broadcast gate must never flip on a bad stats guess: observed on the
-    job that materializes a relation (``Dataset.observe``), or one
-    aggregate over a stored table."""
+    broadcast gate must never flip on a bad stats guess: observed
+    (``Dataset.observe``) on a job that reads the relation anyway — the
+    one that materializes it, or for a stored table the candidate
+    checkpoint job."""
     return (
         int(measures["n"]) * 48
         + int(measures["e"]) * elem_bytes
@@ -1184,22 +1142,23 @@ def _verify_pairs(
     (:func:`_verify_pairs_arrow`; ``n_pairs`` sizes its attach under
     ``broadcast_pairs_budget``, and ``n_pairs`` and ``a_rows`` together
     narrow its stage to one task per ``VERIFY_PAIRS_PER_TASK`` pairs or
-    a-side rows). Over it (or at
-    budget 0) the ceiling-free shuffle shape runs: the distinct pairs are
-    materialized and counted (:func:`_materialize_pairs`), each side's
-    arrays attach through :func:`_attach_pairs` under
-    ``broadcast_pairs_budget``, and the pair-key join is pinned shuffle-hash (the per-pair enriched a-side
-    is never a broadcast candidate at any scale: it is the largest
-    relation in the pipeline, and Catalyst's size estimate flipping a
-    join strategy on it late is exactly the plan instability this stage
-    must not have). Both shapes return the same pair set and the same
-    integer counts."""
+    a-side rows). Over it (or at budget 0) the ceiling-free shuffle shape
+    runs: the distinct pairs (``dropDuplicates``) attach each side's
+    arrays through :func:`_attach_pairs`, both attaches sized by
+    ``n_pairs`` under ``broadcast_pairs_budget`` — nothing is persisted
+    or counted, and the two attaches read one exchange of the distinct
+    pairs (exchange reuse) — and the pair-key join is pinned shuffle-hash
+    (the per-pair enriched a-side is never a broadcast candidate at any
+    scale: it is the largest relation in the pipeline, and Catalyst's
+    size estimate flipping a join strategy on it late is exactly the plan
+    instability this stage must not have). Both shapes return the same
+    pair set and the same integer counts."""
     if 0 < shingle_broadcast_budget and store_bytes <= shingle_broadcast_budget:
         scored = _verify_pairs_arrow(
             store, pairs, a_side, n_pairs, broadcast_pairs_budget, a_rows
         )
     else:
-        cands, n_pairs = _materialize_pairs(pairs.dropDuplicates())
+        cands = pairs.dropDuplicates()
         a = (store if a_side is None else a_side).select(
             F.col("id").alias("id_a"), F.col("sh").alias("sh_a")
         )
@@ -1207,12 +1166,11 @@ def _verify_pairs(
         with_a = _attach_pairs(
             a, cands, "id_a", n_pairs, broadcast_pairs_budget
         ).select("id_a", "id_b", "sh_a")
+        # a semi join on the same distinct pairs, not a distinct of their
+        # id_b: Catalyst folds a distinct over a distinct into one
+        # aggregate, which would expand the candidates a second time
         with_b = _attach_pairs(
-            b,
-            cands.select("id_b").dropDuplicates(),
-            "id_b",
-            n_pairs,
-            broadcast_pairs_budget,
+            b, cands, "id_b", n_pairs, broadcast_pairs_budget, how="left_semi"
         ).select("id_b", "sh_b")
         scored = with_a.join(with_b.hint("shuffle_hash"), "id_b").select(
             "id_a",
@@ -1229,24 +1187,6 @@ def _verify_pairs(
     )
 
 
-def _materialize_pairs(cands: DataFrame) -> tuple[DataFrame, int]:
-    """Persist the candidate-pair relation and return (relation, count).
-
-    ``persist`` (MEMORY_AND_DISK), NOT ``localCheckpoint``: lineage is
-    retained, so an executor loss at cluster scale recomputes the lost
-    blocks instead of killing the job (VERDICT r11 #2). The count both
-    materializes the cache — every verify-stage consumer then reads the
-    same blocks instead of re-running candidate generation per branch —
-    and feeds the broadcast-budget gate.
-
-    Retention: the cache lives until :func:`release_dedup_caches` (or
-    session end) — it cannot be dropped here because the RETURNED plan
-    still reads it; callers running many dedups in one session should
-    release after consuming each result (ADVICE r12)."""
-    cands = _persist_tracked(cands)
-    return cands, cands.count()
-
-
 def _attach_pairs(
     side: DataFrame,
     rel: DataFrame,
@@ -1254,9 +1194,11 @@ def _attach_pairs(
     n_rows: int,
     budget_bytes: int,
     elems: int = 0,
+    how: str = "inner",
 ) -> DataFrame:
-    """Join ``side`` (per-document payloads) with ``rel`` (bare candidate
-    ids/pairs) on ``key``, choosing the join strategy by MEASURED size.
+    """Join (``how``) ``side`` (per-document payloads) with ``rel`` (bare
+    candidate ids/pairs) on ``key``, choosing the join strategy by
+    MEASURED size.
 
     Under ``budget_bytes`` the relation broadcasts — the lookup is
     map-side and the payload table is not shuffled for it. Over budget
@@ -1269,7 +1211,7 @@ def _attach_pairs(
     pairs."""
     est = _pair_relation_bytes(rel, n_rows) + 8 * elems
     if budget_bytes > 0 and est <= budget_bytes:
-        return side.join(F.broadcast(rel), key)
+        return side.join(F.broadcast(rel), key, how)
     logger.info(
         "candidate attach on %r exceeds broadcast budget "
         "(%d rows ~= %d bytes > %d): using shuffle-hash join",
@@ -1278,7 +1220,7 @@ def _attach_pairs(
         est,
         budget_bytes,
     )
-    return side.join(rel.hint("shuffle_hash"), key)
+    return side.join(rel.hint("shuffle_hash"), key, how)
 
 
 def minhash_dedup_pairs(
@@ -1296,28 +1238,27 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """LSH candidates verified with exact shingle-set Jaccard.
 
-    Returns (id_a, id_b, jaccard) for pairs ≥ threshold. Verification joins
-    the (small) candidate set back to shingle arrays — array_intersect /
-    array_union stay JVM-side. ``max_bucket_size`` passes through to the
+    Returns (id_a, id_b, jaccard) for pairs ≥ threshold: the candidate
+    pairs of the hashed shingle store (:func:`_lsh_pair_rows`) verified
+    against the same store by :func:`_verify_pairs`, the one verify
+    primitive of the minhash family. ``max_bucket_size`` passes through to the
     candidate stage's skew guard (see ``minhash_lsh_candidates``; guard
     ON by default, ``None`` = exact oracle mode).
 
-    ``broadcast_pairs_budget`` gates the attach joins of the over-budget
-    verify shape (see :func:`_verify_pairs`): the candidate-pair
-    relation is counted after materialization and broadcast only while
-    its estimated size fits the budget; past it the attaches become
+    ``broadcast_pairs_budget`` gates the attach joins of both verify
+    shapes (see :func:`_verify_pairs`): the bare ids broadcast only while
+    their estimated size fits the budget; past it the attaches become
     shuffle-hash joins on the id key, which cost one shuffle of the
     shingle table but survive any pair count (a fixed broadcast dies at
-    the 8 GB ceiling on a real corpus — VERDICT r11 #1). The Arrow verify
-    broadcasts its grouped bare ids under the same budget, sized from an
-    upper bound on the pairs that the candidate stage's checkpoint job
-    measures. ``shingle_table`` (written by
-    :func:`write_shingle_layout`, bucketed by id) replaces the in-memory
-    shingle recompute+checkpoint: reuse becomes fault-tolerant (a table
-    scan, not pinned executor blocks) and every id-keyed consumer — the
-    signature groupBy and the over-budget attach joins — reads the
-    bucketed distribution instead of shuffling.
+    the 8 GB ceiling on a real corpus — VERDICT r11 #1). The size comes
+    from an upper bound on the pairs that the candidate stage's
+    checkpoint job measures; no verify shape re-counts them.
 
+    ``shingle_table`` (written by :func:`write_shingle_layout`, bucketed
+    by id) replaces the in-memory shingle recompute+checkpoint: reuse
+    becomes fault-tolerant (a table scan, not pinned executor blocks) and
+    every id-keyed consumer — the signature groupBy and the over-budget
+    attach joins — reads the bucketed distribution instead of shuffling.
     ``shingle_table="auto"`` (the default, r13) probes the layout
     database for a stored table whose recorded source fingerprint
     matches this exact corpus (see :func:`find_shingle_layout`); when a
@@ -1325,46 +1266,41 @@ def minhash_dedup_pairs(
     bucketed vs 62.4 s inline at the sf10 lane — and when none matches
     the inline path runs unchanged. Pass ``None`` to force inline.
 
-    ``shingle_broadcast_budget`` (r15) gates the verify join's shape:
-    under it the b-side shingle table broadcasts so the per-pair
-    enriched relation never crosses an exchange (guide §8 — the decision
-    data is one array per DOCUMENT; the heavy per-PAIR bytes move zero
-    times); over it the pair-key shuffle-hash join runs as before. The
-    table's size is observed on the job that checkpoints the inline
-    shingles (one aggregate job over a stored table). See
+    Either way the hashed shingle store (id, sh: array<long>) is the one
+    input of the signature stage and the verify, and its size is measured
+    on a job that runs anyway: the inline store's checkpoint job, or —
+    for a stored table — an observation on the signature input, which
+    lands on the candidate checkpoint job (no extra aggregate).
+    ``shingle_broadcast_budget`` (r15) gates the verify join's shape on
+    that size: under it the store broadcasts so the per-pair enriched
+    relation never crosses an exchange (guide §8 — the decision data is
+    one array per DOCUMENT; the heavy per-PAIR bytes move zero times);
+    over it the pair-key shuffle-hash join runs. See
     ``DEFAULT_SHINGLE_BROADCAST_BUDGET`` for the measured rationale."""
     if shingle_table == "auto":
         shingle_table = find_shingle_layout(df, text_col, id_col, shingle_n)
+    sh_size = Observation()
     if shingle_table is not None:
         _check_shingle_meta(df.sparkSession, shingle_table, shingle_n)
         sh = df.sparkSession.table(shingle_table).select("id", "sh")
-        sh_size = None
+        sig_input = sh.observe(sh_size, *_payload_measures("sh"))
     else:
-        # shingle+hash each document exactly once: the checkpointed
-        # (id, array<long>) table feeds BOTH the signature/banding
-        # pipeline and the Jaccard verification (at 100 TB this is the
-        # difference between one and two full-corpus tokenization
-        # passes, and long arrays checkpoint/intersect ~25 % cheaper than
-        # string arrays — see _hashed_shingle_arrays for the collision
-        # analysis). The checkpoint job also measures the verify gate's
-        # payload size and the store's row count, by observation.
-        obs = Observation()
-        sh = (
+        # shingle+hash each document exactly once: the checkpointed store
+        # feeds BOTH the signature/banding pipeline and the Jaccard
+        # verification (at 100 TB this is the difference between one and
+        # two full-corpus tokenization passes). The checkpoint job also
+        # measures the verify gate's payload size and the store's rows
+        sh = sig_input = (
             _hashed_shingle_arrays(df, text_col, id_col, shingle_n)
-            .observe(obs, *_payload_measures("sh"))
+            .observe(sh_size, *_payload_measures("sh"))
             .localCheckpoint(eager=True)
         )
-        sh_size = obs.get
-    pairs, n_pairs = _lsh_pair_rows(
-        df, text_col, id_col, num_hashes, bands, shingle_n, max_bucket_size,
-        _hashed_shingles=sh,
-    )
-    if sh_size is None and shingle_broadcast_budget > 0:
-        sh_size = sh.agg(*_payload_measures("sh")).collect()[0].asDict()
+    pairs, n_pairs = _lsh_pair_rows(sig_input, num_hashes, bands, max_bucket_size)
+    measures = sh_size.get
     return _verify_pairs(
-        sh, pairs, _payload_bytes(sh_size, 8) if sh_size else 0,
+        sh, pairs, _payload_bytes(measures, 8),
         broadcast_pairs_budget, shingle_broadcast_budget,
-        n_pairs=n_pairs, a_rows=int(sh_size["n"]) if sh_size else None,
+        n_pairs=n_pairs, a_rows=int(measures["n"]),
     ).filter(F.col("jaccard") >= threshold)
 
 
@@ -1526,7 +1462,14 @@ def set_similarity_join(
     )
     wa = sets.select(F.col("id").alias("id_a"), F.col("__s").alias("__sa"))
     wb = sets.select(F.col("id").alias("id_b"), F.col("__s").alias("__sb"))
-    cands, n_pairs = _materialize_pairs(cands)
+    # persist (MEMORY_AND_DISK), NOT localCheckpoint: lineage is retained,
+    # so an executor loss recomputes the lost blocks instead of killing
+    # the job (VERDICT r11 #2). The count both materializes the cache —
+    # both attaches then read the same blocks — and is the pair bound of
+    # the broadcast gate; this join has no candidate stage that measures
+    # it. The cache lives until release_dedup_caches (ADVICE r12)
+    cands = _persist_tracked(cands)
+    n_pairs = cands.count()
     with_a = _attach_pairs(wa, cands, "id_a", n_pairs, broadcast_pairs_budget)
     # r15 verify-join gate (guide §8, same as minhash_dedup_pairs): the
     # per-document b-side broadcasts under the MEASURED budget so the
@@ -2190,10 +2133,12 @@ def incremental_dedup(
     SCALING.md r12) against the stored three-table index. Keep THIS
     function for one-shot comparisons and as the oracle-twin reference.
     Candidate attaches are broadcast only under
-    ``broadcast_pairs_budget`` (measured), else shuffle-hash on id, and
-    the union's payload size, observed on its checkpoint job inline (one
-    aggregate over a stored ``base_shingle_table``), gates the verify
-    against ``shingle_broadcast_budget`` — see ``minhash_dedup_pairs``.
+    ``broadcast_pairs_budget`` (measured), else shuffle-hash on id. The
+    union is the hashed shingle store of both the signature stage and the
+    verify; its payload size, observed on its checkpoint job inline, or
+    on the candidate checkpoint job through the signature input with a
+    stored ``base_shingle_table``, gates the verify against
+    ``shingle_broadcast_budget`` — see ``minhash_dedup_pairs``.
 
     Returns one row per new document: (id, dup_of, match_kind) with
     match_kind ∈ ('exact', 'near', NULL); exact wins over near, and
@@ -2216,18 +2161,20 @@ def incremental_dedup(
         .agg(F.min("base_id").alias("exact_of"))
     )
     # near pass: one shingle+hash+signature+banding run over the tagged
-    # union (hashed shingle arrays — see _hashed_shingle_arrays)
+    # union (the hashed shingle store — see _hashed_shingle_arrays)
     sh_new = _hashed_shingle_arrays(new_docs, "__t", "id", shingle_n)
     if base_shingle_table == "auto":
         base_shingle_table = find_shingle_layout(
             base_df, text_col, id_col, shingle_n
         )
+    sh_size = Observation()
     if base_shingle_table is not None:
         # stored-layout mode: base shingles are a bucketed table scan
         # (cheap to re-read, fault-tolerant), only the small delta is
         # persisted (tracked — release_dedup_caches) — the union needs no
         # localCheckpoint, so nothing is pinned in executor memory
-        # without lineage
+        # without lineage. The union is measured on the signature input,
+        # so the candidate checkpoint job measures it
         _check_shingle_meta(
             new_df.sparkSession, base_shingle_table, shingle_n
         )
@@ -2237,7 +2184,7 @@ def incremental_dedup(
             .withColumn("side", F.lit(1))
             .unionByName(sh_base.withColumn("side", F.lit(0)))
         )
-        sh_size = None
+        sig_input = sh.observe(sh_size, *_payload_measures("sh"))
     else:
         sh_base = _hashed_shingle_arrays(base_docs, "__t", "id", shingle_n)
         # side tag rides INSIDE the checkpointed union: a separate `sides`
@@ -2245,23 +2192,19 @@ def incremental_dedup(
         # pipelines (and their scans) — r8 lazy-reuse audit. The
         # checkpoint job also measures the verify store (the union), by
         # observation
-        obs = Observation()
-        sh = (
+        sh = sig_input = (
             sh_new.withColumn("side", F.lit(1))
             .unionByName(sh_base.withColumn("side", F.lit(0)))
-            .observe(obs, *_payload_measures("sh"))
+            .observe(sh_size, *_payload_measures("sh"))
             .localCheckpoint(eager=True)
         )
-        sh_size = obs.get
     sides = sh.select("id", "side")
     # orient candidates as (new id, base id); candidates are bare id
     # pairs — broadcast into the side lookup only under the budget. Their
     # bound, measured on the candidate checkpoint, bounds both those rows
     # and the cross-side pairs the verify sees
-    cands, n_cands = _lsh_pair_rows(
-        sh, "__t", "id", num_hashes, bands, shingle_n, max_bucket_size,
-        _hashed_shingles=sh,
-    )
+    cands, n_cands = _lsh_pair_rows(sig_input, num_hashes, bands, max_bucket_size)
+    measures = sh_size.get
     sa = sides.select(F.col("id").alias("id_a"), F.col("side").alias("side_a"))
     sb = sides.select(F.col("id").alias("id_b"), F.col("side").alias("side_b"))
     cross = (
@@ -2273,13 +2216,11 @@ def incremental_dedup(
             F.when(F.col("side_a") == 1, F.col("id_b")).otherwise(F.col("id_a")).alias("id_b"),
         )
     )
-    if sh_size is None and shingle_broadcast_budget > 0:
-        sh_size = sh.agg(*_payload_measures("sh")).collect()[0].asDict()
     near = (
         _verify_pairs(
-            sh, cross, _payload_bytes(sh_size, 8) if sh_size else 0,
+            sh, cross, _payload_bytes(measures, 8),
             broadcast_pairs_budget, shingle_broadcast_budget,
-            n_pairs=n_cands, a_rows=int(sh_size["n"]) if sh_size else None,
+            n_pairs=n_cands, a_rows=int(measures["n"]),
         )
         .filter(F.col("jaccard") >= threshold)
         .groupBy(F.col("id_a").alias("id"))
@@ -2372,10 +2313,7 @@ def write_dedup_index(
         sh, f"{prefix}_shingles", "id", buckets=buckets,
         database=database, location=location,
     )
-    stored_sh = df.sparkSession.table(t_sh)
-    sig = minhash_signatures(
-        docs, "__t", "id", num_hashes, shingle_n, _hashed_shingles=stored_sh
-    )
+    sig = _signatures(df.sparkSession.table(t_sh), num_hashes)
     entries = _band_entries(sig, num_hashes, bands)
     if max_bucket_size is not None:
         from pyspark.sql import Window
@@ -2533,13 +2471,10 @@ def incremental_dedup_indexed(
         .observe(sh_size, *_payload_measures("sh"))
         .localCheckpoint(eager=True)
     )
-    sig_new = minhash_signatures(
-        new_docs, "__t", "id", num_hashes, shingle_n, _hashed_shingles=sh_new
-    )
     # the delta's member ids per (band, bucket), lowest ``max_bucket_size``
     # kept, grouped in the lsh table's bucket layout: the probe join below
     # reads both sides in place (no exchange, no broadcast)
-    entries = _band_entries(sig_new, num_hashes, bands)
+    entries = _band_entries(_signatures(sh_new, num_hashes), num_hashes, bands)
     lsh_spec = _bucket_spec(spark, index["lsh"])
     if lsh_spec is not None and lsh_spec[1] == ["band", "bucket"]:
         entries = entries.repartition(lsh_spec[0], "band", "bucket")

@@ -122,24 +122,27 @@ def streaming_near_dedup(
     from truthound_spark.pipeline.dedup import (
         _minhash_coefficients,
         _MERSENNE_31,
-        word_shingles,
+        _shingles_of_words,
+        words,
     )
 
     if num_hashes % bands != 0:
         raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     r = num_hashes // bands
 
-    # two-step projection: shingles materialize once, the 64 min-hashes
-    # reference the alias (multi-use alias -> CollapseProject keeps the
-    # shingle pipeline from being inlined per hash family)
+    # three-step projection: the words split once, then the shingles
+    # read that column (linear — the word_shingles macro re-splits the
+    # text per shingle index), then the 64 min-hashes reference the
+    # shingle alias (multi-use aliases -> CollapseProject keeps each
+    # pipeline from being inlined per use)
     base = stream_df.select(
         F.col(id_col).cast("long").alias("doc_id"),
-        word_shingles(F.col(text_col)).alias("__sh"),
-    )
+        words(F.col(text_col)).alias("__w"),
+    ).select("doc_id", _shingles_of_words(F.col("__w"), 3).alias("__sh"))
     # drop the empty shingle '' (null/whitespace-only docs) BEFORE hashing:
     # otherwise every contentless doc shares one signature and a single
     # giant bucket accretes in the state store (same rationale as
-    # dedup._shingle_rows)
+    # dedup._signatures)
     hashed = base.select(
         "doc_id",
         F.transform(
