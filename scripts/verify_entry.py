@@ -56,6 +56,48 @@ def canon(rows, cols):
     return sorted(out), [cols[i] for i in order]
 
 
+def oracle_db():
+    """A DuckDB connection with one view per test table under ``SF_DIR``."""
+    con = duckdb.connect()
+    for tb in TABLES:
+        con.execute(f"CREATE VIEW {tb} AS SELECT * FROM '{SF_DIR}/{tb}.parquet'")
+    return con
+
+
+def check_entry(spark, con, fn, oracle: str | None):
+    """Run one entry ``fn(spark, SF_DIR)`` and its ``oracle`` SQL on
+    ``con``; compare row count, column names and canonical values.
+
+    Returns ``(status, detail)``: status is ``PASS``, ``weak`` (no
+    oracle, rows only) or ``FAIL``."""
+    try:
+        sdf = fn(spark, SF_DIR)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    except Exception as exc:
+        return "FAIL", f"spark error: {type(exc).__name__}: {exc}"
+    if oracle is None:
+        return "weak", f"rows={len(srows)} (no oracle)"
+    try:
+        cur = con.execute(oracle)
+        ocols = [d[0] for d in cur.description]
+        orows = cur.fetchall()
+    except Exception as exc:
+        return "FAIL", f"oracle error: {exc}"
+    s_canon, s_cols = canon(srows, scols)
+    o_canon, o_cols = canon(orows, ocols)
+    if s_cols != o_cols:
+        return "FAIL", f"schema mismatch spark={s_cols} oracle={o_cols}"
+    if len(s_canon) != len(o_canon):
+        return "FAIL", f"row count spark={len(s_canon)} oracle={len(o_canon)}"
+    if s_canon != o_canon:
+        diffs = [(a, b) for a, b in zip(s_canon, o_canon) if a != b][:3]
+        return "FAIL", "value mismatch; first diffs (spark vs oracle):" + "".join(
+            f"\n      {a}\n   != {b}" for a, b in diffs
+        )
+    return "PASS", f"rows={len(s_canon)}"
+
+
 def main():
     filters = sys.argv[1:]
     import __spark_entry__ as entry
@@ -73,76 +115,26 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for tb in TABLES:
-        con.execute(
-            f"CREATE VIEW {tb} AS SELECT * FROM '{SF_DIR}/{tb}.parquet'"
-        )
-
-    qs = entry.queries()
+    con = oracle_db()
     oracles = entry.oracle_sql()
-    n_pass = n_fail = n_weak = 0
+    counts = {"PASS": 0, "weak": 0, "FAIL": 0}
     failures = []
-    for name, fn in qs.items():
+    for name, fn in entry.queries().items():
         if filters and not any(f in name for f in filters):
             continue
         t0 = time.time()
-        try:
-            sdf = fn(spark, SF_DIR)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as exc:
-            n_fail += 1
+        status, detail = check_entry(spark, con, fn, oracles.get(name))
+        counts[status] += 1
+        if status == "FAIL":
             failures.append(name)
-            print(f"FAIL  {name}: spark error: {type(exc).__name__}: {exc}")
-            continue
-        if name not in oracles:
-            n_weak += 1
-            print(f"weak  {name}: rows={len(srows)} (no oracle) [{time.time()-t0:.1f}s]")
-            continue
-        try:
-            cur = con.execute(oracles[name])
-            ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
-        except Exception as exc:
-            n_fail += 1
-            failures.append(name)
-            print(f"FAIL  {name}: oracle error: {exc}")
-            continue
-        s_canon, s_cols = canon(srows, scols)
-        o_canon, o_cols = canon(orows, ocols)
-        if s_cols != o_cols:
-            n_fail += 1
-            failures.append(name)
-            print(f"FAIL  {name}: schema mismatch spark={s_cols} oracle={o_cols}")
-            continue
-        if len(s_canon) != len(o_canon):
-            n_fail += 1
-            failures.append(name)
-            print(
-                f"FAIL  {name}: row count spark={len(s_canon)} oracle={len(o_canon)}"
-            )
-            continue
-        if s_canon != o_canon:
-            n_fail += 1
-            failures.append(name)
-            diffs = [
-                (a, b) for a, b in zip(s_canon, o_canon) if a != b
-            ][:3]
-            print(f"FAIL  {name}: value mismatch; first diffs (spark vs oracle):")
-            for a, b in diffs:
-                print(f"      {a}")
-                print(f"   != {b}")
-            continue
-        n_pass += 1
-        print(f"PASS  {name}: rows={len(s_canon)} [{time.time()-t0:.1f}s]")
+        print(f"{status:<5} {name}: {detail} [{time.time() - t0:.1f}s]")
 
     print(
-        f"\n== {n_pass} pass, {n_weak} weak (rows-only), {n_fail} fail"
-        + (f": {failures}" if failures else "")
+        f"\n== {counts['PASS']} pass, {counts['weak']} weak (rows-only), "
+        f"{counts['FAIL']} fail" + (f": {failures}" if failures else "")
     )
     spark.stop()
-    sys.exit(1 if n_fail else 0)
+    sys.exit(1 if failures else 0)
 
 
 if __name__ == "__main__":

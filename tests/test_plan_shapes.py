@@ -225,16 +225,20 @@ def test_kmeans_assignment_is_pure_projection(spark):
 
 
 def test_semantic_dedup_broadcasts_centroids_no_cartesian_scan(spark):
-    """Cell assignment must be a broadcast of the (tiny) centroid frame;
-    the corpus-side O(n^2) pairing must never materialize as a cartesian
-    over a file scan — only the in-cell equi-join."""
+    """The corpus-side O(n^2) pairing must never materialize as a
+    cartesian or nested-loop join — only the in-cell equi-join — and the
+    pairing and keep joins read the checkpointed cell assignment instead
+    of re-running it (no window left in the plan). The assignment's own
+    shape (broadcast centroids, partial WindowGroupLimit) is pinned on
+    ``_nearest_cells`` by test_coarse_assign_hoists_self_dots."""
     from truthound_spark.pipeline.dedup import semantic_dedup
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _plan(semantic_dedup(emb, num_cells=8, threshold=0.5, checkpoint=False))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    plan = _plan(semantic_dedup(emb, num_cells=8, threshold=0.5))
     assert "CartesianProduct" not in plan
-    assert "WindowGroupLimit" in plan  # top-1 cell collapses map-side
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Scan ExistingRDD" in plan
+    assert "Window" not in plan
 
 
 def test_global_shuffle_single_shuffle_no_global_sort(spark):
@@ -544,28 +548,32 @@ def test_schema_learn_wide_aggregate_stays_codegen(spark):
 
 
 def test_coarse_assign_hoists_self_dots(spark):
-    """The r14 coarse-assign hoist (_nearest_cell_pairs): the l2_sq
-    self-dot folds must sit BELOW the crossJoin — dot(v,v) once per
-    corpus row, dot(cv,cv) once per centroid — leaving exactly ONE
-    aggregate(zip_with) per (row × centroid) pair in the d2 projection.
-    HOF folds are CodegenFallback (interpreted), so the pre-hoist 3
-    folds/pair were real per-pair cost (measured 2.6× at 1M×16×dim64,
-    benchmarks/assign_hoist_probe.py). Also pins bit-exactness of the
-    hoisted d2 against the inline l2_sq formula on real vectors."""
-    from truthound_spark.pipeline.similarity import _nearest_cell_pairs, l2_sq
+    """``_nearest_cells`` is the one assign/probe path of the IVF, IVF-PQ
+    and SemDeDup operators: the centroids broadcast (no
+    CartesianProduct), the per-key top-n compiles to a partial
+    WindowGroupLimit, and the l2_sq self-dot folds sit BELOW the
+    crossJoin — dot(v,v) once per corpus row, dot(cv,cv) once per
+    centroid — leaving exactly ONE aggregate(zip_with) per (row ×
+    centroid) pair in the d2 projection. HOF folds are CodegenFallback
+    (interpreted), so the pre-hoist 3 folds/pair were real per-pair cost
+    (measured 2.6× at 1M×16×dim64, OPTIMIZATION_r14.md). Also pins that
+    the kept cells are exactly the top-n under the inline l2_sq formula
+    on real vectors."""
+    from pyspark.sql import Window
+
+    from truthound_spark.pipeline.similarity import _nearest_cells, _seed_cells, l2_sq
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     corpus = emb.select(
         F.col("vec_id").cast("long").alias("id"),
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    cents = (
-        corpus.orderBy("id")
-        .limit(16)
-        .select(F.col("id").alias("cell"), F.col("v").alias("cv"))
-    )
-    pairs, d2 = _nearest_cell_pairs(corpus, cents, "v")
-    plan = _plan(pairs.select("id", "cell", d2.alias("d2")))
+    cents = _seed_cells(emb, "embedding", "vec_id", 16)
+    out = _nearest_cells(corpus, "id", "v", cents, 3)
+    plan = _plan(out)
+    assert "BroadcastNestedLoopJoin" in plan
+    assert "CartesianProduct" not in plan
+    assert "WindowGroupLimit" in plan
     # the d2 projection (above the join) folds only the cross term
     d2_lines = [ln for ln in plan.split("\n") if "AS d2#" in ln]
     assert d2_lines, plan
@@ -576,10 +584,15 @@ def test_coarse_assign_hoists_self_dots(spark):
     assert all("__vv#" in ln and "__cc#" in ln for ln in d2_lines), d2_lines
     below = "\n".join(ln for ln in plan.split("\n") if "AS d2#" not in ln)
     assert "__vv#" in below and "__cc#" in below, plan
-    # bit-exactness: identical IEEE result to the inline 3-fold l2_sq
-    mism = (
-        pairs.select((d2 != l2_sq(F.col("v"), F.col("cv"))).cast("int").alias("m"))
-        .agg(F.sum("m").alias("s"))
-        .collect()[0]["s"]
+    # exactness: the same top-3 cells as the inline 3-fold l2_sq
+    w = Window.partitionBy("id").orderBy("d2", "cell")
+    ref = (
+        corpus.crossJoin(cents)
+        .select("id", "cell", l2_sq(F.col("v"), F.col("cv")).alias("d2"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 3)
+        .select("id", "cell")
     )
-    assert mism == 0
+    got = sorted(tuple(r) for r in out.select("id", "cell").collect())
+    assert got == sorted(tuple(r) for r in ref.collect())
+    assert len(got) == 3 * corpus.count()

@@ -914,17 +914,55 @@ def test_pq_search_handles_non_contiguous_cell_ids(spark):
     assert out[1]["rank"] == 2 and out[1]["adc_dist"] == 4.0
 
 
+def _with_null_vectors(spark):
+    """Vectors 0..19 plus NULL vectors at the lowest id (-1) and at a high
+    one (99); the queries are vectors 0 and 1."""
+    rows = [(i, [float((i * 7 + j * 3) % 11) / 11 + 0.1 for j in range(8)]) for i in range(20)]
+    rows += [(-1, None), (99, None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return df, df.filter(F.col("vec_id").between(0, 1))
+
+
 def test_pq_and_ivfpq_ignore_null_vectors(spark):
     from truthound_spark.pipeline.similarity import ivfpq_search, pq_search, pq_train
 
-    rows = [(i, [float((i * 7 + j * 3) % 11) / 11 + 0.1 for j in range(8)]) for i in range(20)]
-    rows.append((99, None))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = df.filter(F.col("vec_id") < 2).withColumnRenamed("vec_id", "query_id")
+    df, q = _with_null_vectors(spark)
+    q = q.withColumnRenamed("vec_id", "query_id")
+    nulls = F.col("id").isin(-1, 99)
     books = pq_train(df, m=2, k=4, iters=1)
-    assert pq_search(df, q, books, k=5).filter(F.col("id") == 99).count() == 0
+    assert pq_search(df, q, books, k=5).filter(nulls).count() == 0
     out = ivfpq_search(df, q, k=5, num_cells=4, nprobe=4, m=2, pq_k=4, iters=1, codebooks=books)
-    assert out.filter(F.col("id") == 99).count() == 0
+    assert out.filter(nulls).count() == 0
+
+
+def test_null_vector_never_seeds_a_cell(spark, tmp_path):
+    """A NULL vector at the lowest id is never a default coarse cell: a
+    NULL centroid makes every row's d2 NULL, which sorts first in the
+    nearest-cell window and pulls every row into that one cell. The
+    cells are the 4 lowest NON-NULL ids, and the null rows change no
+    real neighbor of the IVF searches."""
+    from truthound_spark.pipeline.dedup import semantic_dedup
+    from truthound_spark.pipeline.similarity import (
+        ivf_build_index,
+        ivf_search_index,
+        ivf_seeded_topk,
+    )
+
+    df, q = _with_null_vectors(spark)
+    seeds = {0, 1, 2, 3}
+    cells = {r["cell"] for r in semantic_dedup(df, num_cells=4, threshold=0.99).collect()}
+    assert cells <= seeds
+    path = str(tmp_path / "idx")
+    ivf_build_index(df, path, num_cells=4)
+    assert {r["cell"] for r in spark.read.parquet(f"{path}/centroids").collect()} == seeds
+    clean = df.where(F.col("embedding").isNotNull())
+    want = sorted(map(tuple, ivf_seeded_topk(clean, q, k=3, num_cells=4, nprobe=1).collect()))
+    real = ~F.col("id").isin(-1, 99)
+    for out in (
+        ivf_seeded_topk(df, q, k=3, num_cells=4, nprobe=1),
+        ivf_search_index(spark, path, q, k=3, nprobe=1),
+    ):
+        assert sorted(map(tuple, out.filter(real).collect())) == want
 
 
 def test_curation_funnel_zero_stage_rates_are_null(spark):

@@ -43,8 +43,9 @@ from itertools import product
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from truthound_spark.litexpr import lit_double_array, sql_double
+from truthound_spark.litexpr import sql_double
 from truthound_spark.pipeline.dedup import connected_components
+from truthound_spark.pipeline.similarity import pq_encode, pq_train
 
 __all__ = ["dbscan", "kmeans", "kmeans_vec"]
 
@@ -64,93 +65,26 @@ def kmeans_vec(
     k-lowest-id init, (dist, cell) argmin tie-break), with the distance
     in the l2 dot-product fold form (``dot(x,x) − 2·dot(x,c) +
     dot(c,c)``, sequential left-to-right — the form a SQL engine's
-    list_dot_product reproduces bit-for-bit). Per iteration: one cached
-    narrow scan, literal-array argmin projection, and ONE groupBy whose
-    aggregate is d per-dimension long sums + a count — k rows shuffled.
+    list_dot_product reproduces bit-for-bit). It is one-subspace product
+    quantization: the Lloyd rounds are
+    :func:`truthound_spark.pipeline.similarity.pq_train` at ``m=1`` (per
+    iteration one cached narrow scan, a literal-array argmin projection
+    and ONE groupBy of d per-dimension long sums + a count — k rows
+    shuffled) and the final assignment is
+    :func:`~truthound_spark.pipeline.similarity.pq_encode` of the
+    non-null vectors under the final centroids.
 
     Returns ``(assignment, centroids)``: assignment = (id, cluster);
     centroids = (cell, cv) DataFrame ready to feed
     ``semantic_dedup(centroids=…)``.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
-    pts = (
-        df.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.transform(
-                F.col(vec_col).cast("array<double>"),
-                lambda x: F.round(x * F.lit(float(scale))).cast("long"),
-            ).alias("qv"),
-        )
-        .where(F.col("qv").isNotNull())
-        .localCheckpoint(eager=True)
+    (cents,) = pq_train(df, vec_col, id_col, m=1, k=k, iters=iters, scale=scale)
+    nn = df.where(F.col(vec_col).isNotNull())
+    assignment = pq_encode(nn, [cents], vec_col, id_col, scale).select(
+        "id", F.col("codes")[0].cast("long").alias("cluster")
     )
-    d = len(pts.select("qv").first()["qv"])
-    xv = F.transform(F.col("qv"), lambda q: q / F.lit(float(scale)))
-    pv = pts.select("id", "qv", xv.alias("xv"))
-
-    init = pts.orderBy("id").limit(k).collect()
-    cents: list[tuple[int, list[float]]] = [
-        (ci, [q / scale for q in row["qv"]]) for ci, row in enumerate(init)
-    ]
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
-        )
-
-    def assign(frame: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
-        # the _pq_subspace_code strength reductions (IEEE-safe, results
-        # bit-identical): dot(x,x) folds ONCE per row — a multi-use
-        # projection alias, which CollapseProject keeps — instead of once
-        # per centroid struct, and dot(c,c) is a Python-side constant
-        # (same sequential fold over the same doubles). HOF folds are
-        # interpreted (CodegenFallback), so the k-1 redundant self-dot
-        # evals and k per-row literal-dot evals were real per-row cost.
-        x = F.col("xv")
-        fr = frame.withColumn("__xx", dot(x, x))
-        entries = []
-        for ci, c in centroids:
-            # one F.expr per centroid, not d F.lit round trips (litexpr)
-            lit = lit_double_array(c)
-            cc = sum((v * v for v in c), 0.0)
-            entries.append(
-                F.struct(
-                    (F.col("__xx") - 2 * dot(x, lit) + F.lit(cc)).alias("dist"),
-                    F.lit(ci).cast("long").alias("cell"),
-                )
-            )
-        return fr.withColumn(
-            "cluster", F.array_min(F.array(*entries))["cell"]
-        ).drop("__xx")
-
-    for _ in range(iters):
-        agg = (
-            assign(pv, cents)
-            .groupBy("cluster")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[
-                    F.sum(F.element_at("qv", j + 1)).alias(f"s{j}")
-                    for j in range(d)
-                ],
-            )
-            .collect()
-        )
-        cents = sorted(
-            (
-                (
-                    int(row["cluster"]),
-                    [(float(row[f"s{j}"]) / float(row["n"])) / scale for j in range(d)],
-                )
-                for row in agg
-            ),
-            key=lambda t: t[0],
-        )
-
-    assignment = assign(pv, cents).select("id", "cluster")
     cent_df = df.sparkSession.createDataFrame(
         [(ci, c) for ci, c in cents], "cell long, cv array<double>"
     )

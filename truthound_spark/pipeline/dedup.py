@@ -1611,6 +1611,17 @@ def cosine_sim(a: Column, b: Column) -> Column:
     return cosine_pair(a, b, l2_norm(a), l2_norm(b))
 
 
+def dot(a: Column | str, b: Column | str) -> Column:
+    """``a·b`` as ONE sequential left-to-right fold (zip_with +
+    aggregate) — the element order a SQL engine's list_dot_product
+    folds in, so every distance and cosine built on it reproduces
+    bit-for-bit in the DuckDB oracles. The only dot product of the
+    embedding operators."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+    )
+
+
 def l2_norm(col: Column) -> Column:
     """``||x||`` — hoist out of pair loops (see :func:`cosine_sim`)."""
     return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, v: acc + v * v))
@@ -1620,8 +1631,7 @@ def cosine_pair(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """Cosine with PRE-HOISTED norms: dot(a,b)/(na·nb). The fold and the
     division order match :func:`cosine_sim` exactly, so swapping between
     them never changes a value — only where the norm folds execute."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    return dot / (na * nb)
+    return dot(a, b) / (na * nb)
 
 
 def embedding_near_duplicates(
@@ -1717,7 +1727,6 @@ def semantic_dedup(
     num_cells: int = 16,
     threshold: float = 0.95,
     centroids: DataFrame | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space coarsely, then remove
@@ -1729,12 +1738,13 @@ def semantic_dedup(
     set-at-a-time: drops = distinct id_b of qualifying (id_a < id_b)
     pairs. Deterministic, so a SQL oracle can replay it exactly.
 
-    Clustering: by default the ``num_cells`` lowest-id vectors act as
-    closed-form centroids (same deterministic construction as
-    ``ivf_seeded_topk``); pass ``centroids`` — any (cell, cv) frame, e.g.
-    from :func:`truthound_spark.pipeline.clustering.kmeans` — for
-    production-quality cells. Assignment is a broadcast cross join +
-    per-id top-1 window (WindowGroupLimit collapses the k× amplification
+    Clustering: by default the ``num_cells`` lowest-id non-null vectors
+    act as closed-form centroids (``similarity._seed_cells``, the seeding
+    of ``ivf_seeded_topk``); pass ``centroids`` — any (cell, cv) frame,
+    e.g. from :func:`truthound_spark.pipeline.clustering.kmeans_vec` —
+    for production-quality cells. Assignment is
+    ``similarity._nearest_cells`` top-1: a broadcast cross join + per-id
+    top-1 window (WindowGroupLimit collapses the k× amplification
     map-side before any shuffle), in the l2 dot-product fold form whose
     IEEE result is engine-reproducible.
 
@@ -1747,29 +1757,19 @@ def semantic_dedup(
     Returns one row per input vector: (id, cell, keep) — filter on keep
     for the surviving corpus.
     """
-    from pyspark.sql import Window
-
-    from truthound_spark.pipeline.similarity import _nearest_cell_pairs
+    from truthound_spark.pipeline.similarity import _nearest_cells, _seed_cells
 
     v = df.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
     if centroids is None:
-        # the num_cells LOWEST-ID vectors, not filter(id < num_cells):
-        # with an id space that doesn't start near 0 (snowflake ids) the
-        # latter is silently EMPTY, the cross join produces nothing, and
-        # "filter on keep" would empty the corpus. TakeOrderedAndProject
-        # keeps this a cheap top-k, never a global sort.
-        centroids = v.orderBy("id").limit(num_cells).select(
-            F.col("id").alias("cell"), F.col("v").alias("cv")
-        )
+        centroids = _seed_cells(df, vec_col, id_col, num_cells)
         if centroids.limit(1).count() == 0:
             raise ValueError(
                 "semantic_dedup: input has no vectors to seed default "
                 "centroids from; pass an explicit `centroids` frame"
             )
-    w = Window.partitionBy("id").orderBy("d2", "cell")
     # checkpoint: the assignment feeds BOTH pairing sides and the final
     # keep join — without it Spark re-runs the broadcast+window subtree
     # three times (three full corpus scans at scale)
@@ -1777,18 +1777,11 @@ def semantic_dedup(
     # fold as cosine_sim's denominator, so values are bit-identical to
     # computing it per pair) — the in-cell pairing then folds only the
     # cross dot product: 1 fold per pair instead of 3
-    norm = F.sqrt(
-        F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    apairs, ad2 = _nearest_cell_pairs(v, centroids, "v")
     assigned = (
-        apairs.select("id", "v", "cell", ad2.alias("d2"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("id", "v", "cell", norm.alias("nv"))
+        _nearest_cells(v, "id", "v", centroids, 1)
+        .select("id", "v", "cell", l2_norm(F.col("v")).alias("nv"))
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        assigned = assigned.localCheckpoint(eager=True)
     a = assigned.select(
         F.col("cell"), F.col("id").alias("id_a"), F.col("v").alias("v_a"),
         F.col("nv").alias("n_a"),
@@ -1797,15 +1790,11 @@ def semantic_dedup(
         F.col("cell"), F.col("id").alias("id_b"), F.col("v").alias("v_b"),
         F.col("nv").alias("n_b"),
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("v_a"), F.col("v_b"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    cosine = cosine_pair(F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b"))
     drops = (
         a.join(b, "cell")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(dot / (F.col("n_a") * F.col("n_b")) >= threshold)
+        .filter(cosine >= threshold)
         .select(F.col("id_b").alias("id"))
         .dropDuplicates()
         .withColumn("__drop", F.lit(True))
@@ -2823,11 +2812,6 @@ def semantic_decontaminate(
     Returns (id, n_matches, max_cosine) for contaminated corpus rows;
     anti-join on id to clean the corpus. max_cosine is rounded to 6 dp
     so downstream comparisons don't hinge on sub-ulp float ordering."""
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-        )
-
     # norms hoist into each side's own projection — the per-pair work in
     # the nested-loop join is ONE dot product, not three
     c = corpus.select(

@@ -5,7 +5,7 @@ Scale path: sign-random-projection LSH buckets — candidates only within
 matching hash buckets, turning O(n·q) scoring into bucket-local work; and
 an IVF-style coarse quantizer (k-means centroids → probe nearest cells).
 
-All dot products are JVM-side higher-order functions (zip_with+aggregate);
+All dot products are the one JVM-side fold ``dedup.dot`` (zip_with+aggregate);
 no Python in the scoring loop.
 """
 
@@ -19,6 +19,7 @@ from truthound_spark.pipeline.dedup import (
     _ensure_parallelism,
     cosine_pair,
     cosine_sim,
+    dot,
     l2_norm,
 )
 
@@ -85,9 +86,9 @@ def sign_lsh_signature(vec: "F.Column", planes: list[list[float]]) -> "F.Column"
     column math, no UDF."""
     bits = []
     for i, p in enumerate(planes):
-        lit = lit_double_array(p)
-        dot = F.aggregate(F.zip_with(vec, lit, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v)
-        bits.append(F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
+        bits.append(
+            F.when(dot(vec, lit_double_array(p)) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
+        )
     sig = bits[0]
     for b in bits[1:]:
         sig = sig + b
@@ -183,20 +184,7 @@ def lsh_topk(
         q = q.select(
             "query_id", "qv", F.explode(probes).alias("bucket")
         )
-    scored = (
-        corpus.withColumn("__na", l2_norm(F.col("v")))
-        .join(F.broadcast(q.withColumn("__nb", l2_norm(F.col("qv")))), "bucket")
-        .filter(F.col("id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "id",
-            cosine_pair(F.col("v"), F.col("qv"), F.col("__na"), F.col("__nb")).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _cosine_topk(corpus, q, "bucket", k)
 
 
 def ivf_assign(
@@ -269,39 +257,120 @@ def l2_sq(a: "F.Column", b: "F.Column") -> "F.Column":
     hash-match across engines.
 
     For the crossJoin(centroids) assign shape use
-    :func:`_nearest_cell_pairs` instead — same distance bit-for-bit,
+    :func:`_nearest_cells` instead — same distance bit-for-bit,
     2/3 of the folds hoisted out of the per-pair expression."""
-    dot = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
-    )
     return dot(a, a) - 2 * dot(a, b) + dot(b, b)
 
 
-def _nearest_cell_pairs(left: DataFrame, cents: DataFrame, vcol: str):
-    """``left.crossJoin(broadcast(cents))`` with the ``l2_sq`` self-dot
-    terms HOISTED out of the per-pair expression — the
-    ``_pq_subspace_code`` strength reductions applied to the coarse
-    assign: ``dot(v,v)`` folds once per LEFT row (a projection below the
-    join) and ``dot(cv,cv)`` once per centroid row (below the broadcast
-    exchange, |cells| evals total), so each (row × centroid) pair folds
-    only the cross term — 1 fold per pair instead of 3. HOF folds are
-    CodegenFallback (interpreted per eval), which is what makes the
-    redundant evals a real per-row cost at scale.
+# ---------------------------------------------------------------------------
+# coarse quantizer: every IVF / IVF-PQ / SemDeDup operator seeds, assigns,
+# probes and scores through these four helpers
+# ---------------------------------------------------------------------------
 
-    ``d2`` combines the SAME fold values with the SAME operator tree as
-    ``l2_sq`` (Add(Subtract(vv, 2·ab), cc), multiplication commutes
-    bit-exactly) → distances and therefore window ranks are
-    bit-identical; the IVF/SemDeDup oracle slots certify it.
 
-    Returns ``(pairs, d2)``; callers select their kept columns plus
-    ``d2.alias(...)`` and never expose __vv/__cc."""
-    dot = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
+def _seed_cells(df: DataFrame, vec_col: str, id_col: str, num_cells: int) -> DataFrame:
+    """The closed-form coarse quantizer: the ``num_cells`` lowest-id
+    NON-NULL vectors as ``(cell, cv)``, cell = the vector's id. Lowest
+    ids (a TakeOrderedAndProject top-k, never a global sort), not
+    ``filter(id < num_cells)``, which is empty for id spaces that do not
+    start near 0 (snowflake ids). Null vectors cannot seed: a NULL
+    centroid makes every row's d2 NULL, which sorts FIRST in the
+    nearest-cell window and pulls every row into that one cell."""
+    return (
+        df.where(F.col(vec_col).isNotNull())
+        .select(
+            F.col(id_col).cast("long").alias("cell"),
+            F.col(vec_col).cast("array<double>").alias("cv"),
+        )
+        .orderBy("cell")
+        .limit(num_cells)
     )
+
+
+def _nearest_cells(
+    left: DataFrame, key: str, vcol: str, cents: DataFrame, n: int
+) -> DataFrame:
+    """``left`` plus ``cell``: each ``key``'s ``n`` nearest ``(cell, cv)``
+    centroids by l2 distance, ties to the lower cell — ``n=1`` is the
+    coarse ASSIGNMENT, ``n=nprobe`` a query's PROBES.
+
+    Plan: ``left.crossJoin(broadcast(cents))`` (never a corpus shuffle),
+    then a ``row_number`` over ``(d2, cell)`` per key whose ``<= n``
+    filter compiles to a partial ``WindowGroupLimit`` — the |cells|×
+    amplification collapses map-side, before any exchange.
+
+    The :func:`l2_sq` self-dots are HOISTED out of the per-pair
+    expression (the ``_pq_subspace_code`` strength reductions):
+    ``dot(v,v)`` folds once per LEFT row, in a projection below the
+    join, and ``dot(cv,cv)`` once per centroid row, below the broadcast
+    exchange, so each (row × centroid) pair folds only the cross term.
+    HOF folds are CodegenFallback (interpreted per eval), which is what
+    makes redundant evals a real per-row cost at scale. ``d2`` combines
+    the SAME fold values with the SAME operator tree as ``l2_sq``
+    (Add(Subtract(vv, 2·ab), cc), multiplication commutes bit-exactly),
+    so distances and therefore cells are bit-identical to it and to the
+    oracles' list_dot_product replay."""
+    kept = [*left.columns, "cell"]
     lw = left.withColumn("__vv", dot(F.col(vcol), F.col(vcol)))
     cw = cents.withColumn("__cc", dot(F.col("cv"), F.col("cv")))
     d2 = F.col("__vv") - 2 * dot(F.col(vcol), F.col("cv")) + F.col("__cc")
-    return lw.crossJoin(F.broadcast(cw)), d2
+    w = Window.partitionBy(key).orderBy("d2", "cell")
+    return (
+        lw.crossJoin(F.broadcast(cw))
+        .select(*kept, d2.alias("d2"))
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= n)
+        .select(*kept)
+    )
+
+
+def _cosine_topk(corpus: DataFrame, probes: DataFrame, key: str, k: int) -> DataFrame:
+    """Exact cosine top-k of each query over the corpus rows that share
+    its ``key`` (LSH bucket or IVF cell): ``corpus`` (id, v, key) joins
+    the BROADCAST ``probes`` (query_id, qv, key) on ``key``, a query
+    never scores itself, and the per-query ``rank <= k`` window keeps
+    ``(query_id, id, cosine, rank)`` — ties on cosine to the lower id.
+    Each side's norm folds once per row, below the join, so a pair folds
+    only its cross term; :func:`cosine_pair` keeps the values
+    bit-identical to ``cosine_sim``."""
+    scored = (
+        corpus.withColumn("__na", l2_norm(F.col("v")))
+        .join(F.broadcast(probes.withColumn("__nb", l2_norm(F.col("qv")))), key)
+        .filter(F.col("id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "id",
+            cosine_pair(F.col("v"), F.col("qv"), F.col("__na"), F.col("__nb")).alias(
+                "cosine"
+            ),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _residual_frame(df: DataFrame, vec_col: str, id_col: str, cents: DataFrame) -> DataFrame:
+    """``(id, cell, __rv)``: each non-null vector's coarse cell and its
+    RESIDUAL ``x − centroid(cell(x))`` — one assignment pass
+    (:func:`_nearest_cells` top-1) plus an elementwise subtract against
+    the broadcast centroids. The input of residual IVF-PQ training and
+    encoding (``ivfpq_search(residual=True)``, ``ivfpq_train_residual``)."""
+    base = df.select(
+        F.col(id_col).cast("long").alias("id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+    ).where(F.col("v").isNotNull())
+    return (
+        _nearest_cells(base, "id", "v", cents, 1)
+        .join(
+            F.broadcast(cents.withColumnRenamed("cell", "__ccell")),
+            F.col("cell") == F.col("__ccell"),
+        )
+        .select(
+            "id",
+            "cell",
+            F.zip_with(F.col("v"), F.col("cv"), lambda a, b: a - b).alias("__rv"),
+        )
+    )
 
 
 def ivf_seeded_topk(
@@ -314,17 +383,17 @@ def ivf_seeded_topk(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF ANN with DETERMINISTIC seed centroids: the ``num_cells``
-    lowest-id vectors act as the coarse quantizer (no Lloyd iterations),
-    making the whole index closed-form and oracle-verifiable; the
-    production path (``ivf_assign``) fits real k-means on a seeded sample
-    and shares this exact probe/search plan shape.
+    lowest-id non-null vectors act as the coarse quantizer
+    (:func:`_seed_cells`, no Lloyd iterations), making the whole index
+    closed-form and oracle-verifiable; the production path
+    (``ivf_assign``) fits real k-means on a seeded sample.
 
-    Plan: centroids are a broadcast 16-row frame; corpus assignment =
-    cross join with centroids → min-(distance, cell) window (16× map-side
-    amplification, collapsed before any shuffle by the WindowGroupLimit
-    partial top-1); probe = each query's ``nprobe`` nearest cells; search
-    = exact cosine within probed cells only, per-query top-k window.
-    Returns (query_id, id, cosine, rank).
+    Plan: centroids are a broadcast 16-row frame; corpus assignment and
+    each query's ``nprobe`` probed cells are :func:`_nearest_cells`
+    (broadcast cross join → min-(distance, cell) window, collapsed
+    before any shuffle by the WindowGroupLimit partial top-n); search =
+    :func:`_cosine_topk` within probed cells only. Returns (query_id,
+    id, cosine, rank).
 
     Cross-engine determinism caveat (ADVICE r3): the argmin cell
     assignment and the final rank order compare UNROUNDED floats, so a
@@ -335,54 +404,21 @@ def ivf_seeded_topk(
     differently on another engine version — ties at 6-dp are already
     broken deterministically by (cell) / (id); if a future oracle flips,
     round the window sort keys like pca_power_anomaly_lineitem does."""
-    cents = (
-        # num_cells LOWEST ids (top-k, not filter(id < num_cells) which is
-        # empty when the id space doesn't start near 0 — ADVICE r4)
-        df.select(
-            F.col(id_col).cast("long").alias("cell"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
-        .orderBy("cell")
-        .limit(num_cells)
-    )
+    cents = _seed_cells(df, vec_col, id_col, num_cells)
     corpus = df.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    wa = Window.partitionBy("id").orderBy("d2", "cell")
-    apairs, ad2 = _nearest_cell_pairs(corpus, cents, "v")
-    assigned = (
-        apairs.select("id", "v", "cell", ad2.alias("d2"))
-        .withColumn("__rn", F.row_number().over(wa))
-        .filter(F.col("__rn") == 1)
-        .select("id", "v", "cell")
     )
     q = queries.select(
         F.col(id_col).cast("long").alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
-    wp = Window.partitionBy("query_id").orderBy("d2", "cell")
-    ppairs, pd2 = _nearest_cell_pairs(q, cents, "qv")
-    probes = (
-        ppairs.select("query_id", "qv", "cell", pd2.alias("d2"))
-        .withColumn("__rn", F.row_number().over(wp))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "qv", "cell")
+    return _cosine_topk(
+        _nearest_cells(corpus, "id", "v", cents, 1),
+        _nearest_cells(q, "query_id", "qv", cents, nprobe),
+        "cell",
+        k,
     )
-    scored = (
-        assigned.withColumn("__na", l2_norm(F.col("v")))
-        .join(F.broadcast(probes.withColumn("__nb", l2_norm(F.col("qv")))), "cell")
-        .filter(F.col("id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "id",
-            cosine_pair(F.col("v"), F.col("qv"), F.col("__na"), F.col("__nb")).alias(
-                "cosine"
-            ),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("id"))
-    return scored.withColumn("rank", F.row_number().over(wk)).filter(F.col("rank") <= k)
 
 
 def embedding_stats(
@@ -412,10 +448,7 @@ def embedding_stats(
     """
     v = F.col(vec_col).cast("array<double>")
     dim = F.size(v)
-    dot = F.aggregate(
-        F.zip_with(v, v, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
-    norm = F.sqrt(dot)
+    norm = F.sqrt(dot(v, v))
     has_nan = F.exists(v, lambda x: F.isnan(x))
     is_zero = (dim > 0) & F.forall(v, lambda x: x == F.lit(0.0))
     qnorm = F.round(norm * F.lit(1e6)).cast("long")
@@ -491,34 +524,22 @@ def ivf_build_index(
     * ``{path}/centroids``          — (cell, cv), tiny
 
     ``centroids``: any (cell, cv) frame — :func:`truthound_spark.pipeline.
-    clustering.kmeans_vec` for production, default = the ``num_cells``
-    lowest-id vectors (closed-form, oracle-verifiable). Assignment is the
-    same broadcast + WindowGroupLimit top-1 plan as ``ivf_seeded_topk``.
+    clustering.kmeans_vec` for production, default = :func:`_seed_cells`
+    (the ``num_cells`` lowest-id non-null vectors: closed-form,
+    oracle-verifiable). Assignment is :func:`_nearest_cells` top-1.
     """
     v = df.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
     if centroids is None:
-        # num_cells LOWEST ids, not filter(id < num_cells) — the latter is
-        # empty for id spaces that don't start near 0 (snowflake ids) and
-        # would silently build an index with zero vectors assigned
-        centroids = v.orderBy("id").limit(num_cells).select(
-            F.col("id").alias("cell"), F.col("v").alias("cv")
-        )
+        centroids = _seed_cells(df, vec_col, id_col, num_cells)
         if centroids.limit(1).count() == 0:
             raise ValueError(
                 "ivf_build_index: input has no vectors to seed default "
                 "centroids from; pass an explicit `centroids` frame"
             )
-    wa = Window.partitionBy("id").orderBy("d2", "cell")
-    apairs, ad2 = _nearest_cell_pairs(v, centroids, "v")
-    assigned = (
-        apairs.select("id", "v", "cell", ad2.alias("d2"))
-        .withColumn("__rn", F.row_number().over(wa))
-        .filter(F.col("__rn") == 1)
-        .select("id", "v", "cell")
-    )
+    assigned = _nearest_cells(v, "id", "v", centroids, 1)
     assigned.write.mode(mode).partitionBy("cell").parquet(f"{path}/vectors")
     centroids.write.mode(mode).parquet(f"{path}/centroids")
 
@@ -548,14 +569,8 @@ def ivf_search_index(
         F.col(id_col).cast("long").alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
-    wp = Window.partitionBy("query_id").orderBy("d2", "cell")
-    ppairs, pd2 = _nearest_cell_pairs(q, cents, "qv")
-    probes = (
-        ppairs.select("query_id", "qv", "cell", pd2.alias("d2"))
-        .withColumn("__rn", F.row_number().over(wp))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "qv", "cell")
-        .localCheckpoint(eager=True)
+    probes = _nearest_cells(q, "query_id", "qv", cents, nprobe).localCheckpoint(
+        eager=True
     )
     probed_cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
     corpus = (
@@ -563,20 +578,7 @@ def ivf_search_index(
         .filter(F.col("cell").isin(probed_cells))
         .select("id", "v", F.col("cell").cast("long").alias("cell"))
     )
-    scored = (
-        corpus.withColumn("__na", l2_norm(F.col("v")))
-        .join(F.broadcast(probes.withColumn("__nb", l2_norm(F.col("qv")))), "cell")
-        .filter(F.col("id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "id",
-            cosine_pair(F.col("v"), F.col("qv"), F.col("__na"), F.col("__nb")).alias(
-                "cosine"
-            ),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("id"))
-    return scored.withColumn("rank", F.row_number().over(wk)).filter(F.col("rank") <= k)
+    return _cosine_topk(corpus, probes, "cell", k)
 
 
 def quantize_embeddings(
@@ -678,11 +680,12 @@ def pq_train(
     between int8 quantization (4x) and raw floats; at m=8, k=256 over
     768-dim floats the compression is 384x.
 
-    Training replicates :func:`truthound_spark.pipeline.clustering
-    .kmeans_vec` per subspace EXACTLY (same determinism contract:
-    quantized-long sums, k-lowest-id init, (dist, cell) argmin
-    tie-break; the equivalence is pinned by tests and the oracle, which
-    replays kmeans_vec per slice) — but FUSED: every Lloyd round is ONE
+    Training is deterministic Lloyd's per subspace (quantized-long sums,
+    k-lowest-id init, (dist, cell) argmin tie-break — the oracle replays
+    it per slice); at ``m=1`` it IS
+    :func:`truthound_spark.pipeline.clustering.kmeans_vec`, which is
+    this trainer plus the :func:`pq_encode` assignment. FUSED across
+    subspaces: every Lloyd round is ONE
     exploded aggregation covering all m subspaces (rows explode to
     (subspace, subvector, cell), groupBy (subspace, cell) sums), so the
     per-iteration cost is one scan + one m·k-row shuffle instead of m
@@ -721,12 +724,6 @@ def pq_train(
     ]
     xv = F.transform(F.col("qv"), lambda q: q / F.lit(float(scale)))
     pv = pts.select("id", "qv", xv.alias("xv"))
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
-        )
-
     # subvectors and their self-dots materialize once per row (their own
     # projections — multi-use aliases survive CollapseProject), so each
     # round's argmin tree is k lookups per subspace, not k re-slices and
@@ -739,7 +736,7 @@ def pq_train(
         "qv",
         *[F.col(f"__xs{s}") for s in range(m)],
         *[
-            _dot(F.col(f"__xs{s}"), F.col(f"__xs{s}")).alias(f"__xx{s}")
+            dot(F.col(f"__xs{s}"), F.col(f"__xs{s}")).alias(f"__xx{s}")
             for s in range(m)
         ],
     )
@@ -786,9 +783,9 @@ def pq_train(
 
 def _pq_subspace_code(xsub, centroids: list[tuple[int, list[float]]], xx=None):
     """argmin-by-(dist, cell) code for one subvector against inlined
-    centroid literals — the kmeans_vec assignment expression
-    ``dot(x,x) − 2·dot(x,c) + dot(c,c)`` with the same left-to-right
-    fold order. Three IEEE-safe strength reductions keep the expression
+    centroid literals — the Lloyd assignment of :func:`pq_train` (and so
+    of ``kmeans_vec``), ``dot(x,x) − 2·dot(x,c) + dot(c,c)`` with the
+    same left-to-right fold order. Three IEEE-safe strength reductions keep the expression
     tree O(1) in k instead of O(k): ``dot(c,c)`` is a Python-side
     constant (identical sequential fold over the same doubles), ``xx``
     lets the caller compute ``dot(x,x)`` ONCE per subspace, and — the
@@ -799,14 +796,6 @@ def _pq_subspace_code(xsub, centroids: list[tuple[int, list[float]]], xx=None):
     the whole train+search plan latency ~5× (pure driver/codegen time —
     the data math is unchanged and bit-identical, pinned by the PQ
     oracle slots)."""
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda p, q: p * q),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     if xx is None:
         xx = dot(xsub, xsub)
     # one F.expr per codebook instead of k·(d+2) F.lit py4j round trips —
@@ -879,12 +868,6 @@ def _pq_codes_from(frame: DataFrame, codebooks, extra: tuple[str, ...] = ()):
     materialization and the argmin wiring exist once."""
     m = len(codebooks)
     sub_d = len(codebooks[0][0][1])
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
-        )
-
     subs = frame.select(
         "id",
         *extra,
@@ -952,8 +935,6 @@ def pq_search(
     scored relation carries only (id, m codes). Scores are quantized to
     1e-6 before ranking (engine-reproducible rank order, same contract
     as IVF/BM25). Returns (query_id, id, adc_dist, rank)."""
-    from pyspark.sql import Window
-
     sub_d = len(codebooks[0][0][1])
     qrows = queries.select(
         F.col(query_id_col).cast("long").alias("query_id"),
@@ -1071,8 +1052,9 @@ def ivfpq_search(
     candidates, PQ bounds the bytes per candidate.
 
     Deterministic end to end: coarse centroids are the ``num_cells``
-    lowest-id vectors (same closed-form seeding as ``ivf_seeded_topk``),
-    PQ codebooks come from :func:`pq_train` (quantized-long Lloyd
+    lowest-id non-null vectors (:func:`_seed_cells`; cells and probes
+    come from :func:`_nearest_cells`, as in ``ivf_seeded_topk``), PQ
+    codebooks come from :func:`pq_train` (quantized-long Lloyd
     rounds), and ADC scores quantize to 1e-6 before ranking — the whole
     train→assign→probe→score chain hash-certifies against a relational
     oracle.
@@ -1094,42 +1076,7 @@ def ivfpq_search(
     chosen mode.
 
     Returns (query_id, id, adc_dist, rank), rank ≤ k per query."""
-    from pyspark.sql import Window
-
-    cents = (
-        # null vectors can't seed cells: a NULL centroid nulls every
-        # row's d2, which sorts FIRST and hijacks all assignments
-        # (review r5 #3)
-        df.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).cast("long").alias("cell"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
-        .orderBy("cell")
-        .limit(num_cells)
-    )
-    qx = F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda x: F.round(x * F.lit(float(scale))) / F.lit(float(scale)),
-    )
-    wa = Window.partitionBy("id").orderBy("d2", "cell")
-    # combined pass: coarse cell via full-vector argmin + PQ codes from
-    # the SAME materialized (sub)vectors — the corpus is read once.
-    # Null vectors drop up front (pq_train's contract): without the
-    # guard they'd take rn=1 at the lowest cell (NULL d2 sorts first)
-    # and score as phantom candidates (review r5).
-    base = df.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        qx.alias("__x"),
-    ).where(F.col("v").isNotNull())
-    apairs, ad2 = _nearest_cell_pairs(base, cents, "v")
-    assigned = (
-        apairs.select("id", "v", "__x", "cell", ad2.alias("d2"))
-        .withColumn("__rn", F.row_number().over(wa))
-        .filter(F.col("__rn") == 1)
-        .select("id", "v", "__x", "cell")
-    )
+    cents = _seed_cells(df, vec_col, id_col, num_cells)
     if residual:
         # __x becomes the grid-quantized residual x − centroid(cell);
         # every PQ stage below then runs unchanged on it. The RAW
@@ -1137,20 +1084,7 @@ def ivfpq_search(
         # assignment pass instead of redoing the corpus-scale
         # crossJoin+window inside ivfpq_train_residual (review r5 #4 —
         # the module's read-once contract).
-        res = (
-            assigned.join(
-                F.broadcast(cents.withColumnRenamed("cell", "__ccell")),
-                F.col("cell") == F.col("__ccell"),
-            )
-            .select(
-                "id",
-                "cell",
-                F.zip_with(F.col("v"), F.col("cv"), lambda a, b: a - b).alias(
-                    "__rv"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
+        res = _residual_frame(df, vec_col, id_col, cents).localCheckpoint(eager=True)
         if codebooks is None:
             codebooks = pq_train(
                 res, "__rv", "id", m=m, k=pq_k, iters=iters, scale=scale
@@ -1164,11 +1098,25 @@ def ivfpq_search(
             ).alias("__x"),
         )
     else:
+        # combined pass: coarse cell via full-vector argmin + PQ codes from
+        # the SAME materialized (sub)vectors — the corpus is read once.
+        # Null vectors drop up front (pq_train's contract): without the
+        # guard they'd take rn=1 at the lowest cell (NULL d2 sorts first)
+        # and score as phantom candidates (review r5).
+        qx = F.transform(
+            F.col(vec_col).cast("array<double>"),
+            lambda x: F.round(x * F.lit(float(scale))) / F.lit(float(scale)),
+        )
+        base = df.select(
+            F.col(id_col).cast("long").alias("id"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+            qx.alias("__x"),
+        ).where(F.col("v").isNotNull())
         if codebooks is None:
             codebooks = pq_train(
                 df, vec_col, id_col, m=m, k=pq_k, iters=iters, scale=scale
             )
-        assigned = assigned.select("id", "__x", "cell")
+        assigned = _nearest_cells(base, "id", "v", cents, 1).select("id", "__x", "cell")
     sub_d = len(codebooks[0][0][1])
     enc = _pq_codes_from(assigned, codebooks, extra=("cell",))
 
@@ -1176,14 +1124,7 @@ def ivfpq_search(
         F.col(query_id_col).cast("long").alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
-    wp = Window.partitionBy("query_id").orderBy("d2", "cell")
-    ppairs, pd2 = _nearest_cell_pairs(q, cents, "qv")
-    probes = (
-        ppairs.select("query_id", "qv", "cell", pd2.alias("d2"))
-        .withColumn("__rn", F.row_number().over(wp))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
+    probes = _nearest_cells(q, "query_id", "qv", cents, nprobe)
     prows = probes.collect()
     by_query: dict[int, dict] = {}
     for r in prows:
@@ -1252,46 +1193,13 @@ def ivfpq_train_residual(
 ) -> list[list[tuple[int, list[float]]]]:
     """PQ codebooks over coarse-cell RESIDUALS ``x − centroid(cell(x))``
     — the training half of residual IVF-PQ (``ivfpq_search(residual=
-    True)``). The residual frame is one assignment pass (broadcast
-    seeded centroids, argmin window) + an elementwise subtract; training
-    is the standard :func:`pq_train` on it, so the determinism contract
-    (quantized-long sums, lowest-id init) is inherited verbatim."""
-    from pyspark.sql import Window
-
-    cents = (
-        df.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).cast("long").alias("cell"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
-        .orderBy("cell")
-        .limit(num_cells)
-    )
-    wa = Window.partitionBy("id").orderBy("d2", "cell")
-    base = df.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).where(F.col("v").isNotNull())
-    apairs, ad2 = _nearest_cell_pairs(base, cents, "v")
-    assigned = (
-        apairs.select("id", "v", "cell", ad2.alias("d2"))
-        .withColumn("__rn", F.row_number().over(wa))
-        .filter(F.col("__rn") == 1)
-        .select("id", "v", "cell")
-    )
-    res = (
-        assigned.join(
-            F.broadcast(cents.withColumnRenamed("cell", "__ccell")),
-            F.col("cell") == F.col("__ccell"),
-        )
-        .select(
-            F.col("id").alias("vec_id"),
-            F.zip_with(F.col("v"), F.col("cv"), lambda a, b: a - b).alias(
-                "embedding"
-            ),
-        )
-    )
-    return pq_train(res, "embedding", "vec_id", m=m, k=pq_k, iters=iters, scale=scale)
+    True)``). The residual frame is :func:`_residual_frame` over the
+    :func:`_seed_cells` centroids, the one ``ivfpq_search`` encodes;
+    training is the standard :func:`pq_train` on it, so the determinism
+    contract (quantized-long sums, lowest-id init) is inherited
+    verbatim."""
+    res = _residual_frame(df, vec_col, id_col, _seed_cells(df, vec_col, id_col, num_cells))
+    return pq_train(res, "__rv", "id", m=m, k=pq_k, iters=iters, scale=scale)
 
 
 def l2_normalize(col: "F.Column") -> "F.Column":
@@ -1442,9 +1350,7 @@ def embedding_drift(
         ).alias("shift"),
     )
     if top_k:
-        from pyspark.sql import Window as _W
-
-        w = _W.orderBy(F.desc("shift"), "pos")
+        w = Window.orderBy(F.desc("shift"), "pos")
         out = (
             out.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= top_k)
